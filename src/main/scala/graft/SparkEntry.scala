@@ -12,13 +12,26 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** The query modules, labelled, in declaration order (the module
+    * label is what `docs/queries.md` shows). */
+  def modules: Seq[(String, Seq[Q])] = Seq(
+    "Relational" -> Relational.queries,
+    "Breadth" -> Breadth.queries,
+    "TpchShapes" -> TpchShapes.queries,
+    "TextAnalysis" -> TextAnalysis.queries,
+    "Dedup" -> Dedup.queries,
+    "Similarity" -> Similarity.queries,
+    "Events" -> Events.queries,
+    "Multimodal" -> Multimodal.queries,
+    "Sampling" -> Sampling.queries,
+    "Bpe" -> Bpe.queries,
+    "Curation" -> Curation.queries,
+    "Html" -> Html.queries,
+    "LangId" -> LangId.queries,
+    "Url" -> Url.queries)
+
   /** All registered capability queries, in declaration order. */
-  def allQueries: Seq[Q] =
-    Relational.queries ++ Breadth.queries ++ TpchShapes.queries ++
-      TextAnalysis.queries ++ Dedup.queries ++ Similarity.queries ++
-      Events.queries ++ Multimodal.queries ++ Sampling.queries ++
-      Bpe.queries ++ Curation.queries ++ Html.queries ++ LangId.queries ++
-      Url.queries
+  def allQueries: Seq[Q] = modules.flatMap(_._2)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {

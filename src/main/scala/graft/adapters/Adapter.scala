@@ -83,12 +83,22 @@ trait OutputAdapter {
 /** Explicit registry (no classpath scan needed — reference Adapters.INPUTS /
   * OUTPUTS populated via @RegisteredPackage scan, Main.java:114,129). */
 object Adapters {
+  private val parquetInput = new HadoopFileInput(
+    "hadoopParquet", "Parquet files (schema carried by the files; vectorized scan)",
+    "parquet", mergeSchema = true)
+  private val parquetOutput = new HadoopFileOutput(
+    "hadoopParquet", "Parquet files (columnar, compressed, splittable)",
+    "parquet", "snappy", bucketed = true)
+
   val inputs: Map[String, InputAdapter] = ListMap(
     "hadoopColumnar" -> new HadoopColumnarInput,
     "hadoopText" -> new HadoopTextInput,
-    "hadoopParquet" -> new HadoopParquetInput,
-    "hadoopJson" -> new HadoopJsonInput,
-    "hadoopOrc" -> new HadoopOrcInput,
+    "hadoopParquet" -> parquetInput,
+    "hadoopJson" -> new HadoopFileInput(
+      "hadoopJson", "JSON-lines files (schema inferred or projected)", "json", mergeSchema = false),
+    "hadoopOrc" -> new HadoopFileInput(
+      "hadoopOrc", "ORC files (schema carried by the files; vectorized scan)", "orc",
+      mergeSchema = true),
     "jdbcColumnar" -> new JdbcColumnarInput,
     // s3direct* verbs: the same Hadoop sources on s3a:// paths, wrapped
     // with the reference's per-task credentials/endpoint/region params
@@ -104,20 +114,21 @@ object Adapters {
     // drift per_file_schema exists to surface. A mixed prefix is served
     // by two tasks over the same path (each source prunes to its format
     // via path_filter/suffix); docs/adapters.md states the recipe.
-    "s3directParquet" -> new S3DirectInputAdapter("s3directParquet", new HadoopParquetInput),
+    "s3directParquet" -> new S3DirectInputAdapter("s3directParquet", parquetInput),
     // the operator library as a source: any registered query → any sink
     "graftQuery" -> new GraftQueryInput)
 
   val outputs: Map[String, OutputAdapter] = ListMap(
     "hadoopColumnar" -> new HadoopColumnarOutput,
     "hadoopText" -> new HadoopTextOutput,
-    "hadoopParquet" -> new HadoopParquetOutput,
-    "hadoopJson" -> new HadoopJsonOutput,
-    "hadoopOrc" -> new HadoopOrcOutput,
+    "hadoopParquet" -> parquetOutput,
+    "hadoopJson" -> new HadoopFileOutput("hadoopJson", "JSON-lines files", "json", "none"),
+    "hadoopOrc" -> new HadoopFileOutput(
+      "hadoopOrc", "ORC files (columnar, compressed, splittable)", "orc", "snappy"),
     "jdbcColumnar" -> new JdbcColumnarOutput,
     "s3directColumnar" -> new S3DirectOutputAdapter("s3directColumnar", new HadoopColumnarOutput),
     "s3directText" -> new S3DirectOutputAdapter("s3directText", new HadoopTextOutput),
-    "s3directParquet" -> new S3DirectOutputAdapter("s3directParquet", new HadoopParquetOutput))
+    "s3directParquet" -> new S3DirectOutputAdapter("s3directParquet", parquetOutput))
 
   def input(verb: String): InputAdapter = inputs.getOrElse(
     verb, throw new IllegalArgumentException(s"Input adapter '$verb' not found"))

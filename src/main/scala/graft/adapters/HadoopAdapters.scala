@@ -3,7 +3,7 @@ package graft.adapters
 import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -24,6 +24,27 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 private[adapters] object HadoopFiles {
 
+  // Params the file verbs share, declared once; each verb lists the ones
+  // it takes, in its own order.
+  val columnsParam: ParamDef = ParamDef("columns", "Columns to select (subset, any order)")
+  val subDirsParam: ParamDef = ParamDef(
+    "sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false))
+  val recursiveParam: ParamDef = ParamDef(
+    "recursive",
+    "Recurse into nested directories (the reference's S3 prefix listing is recursive)",
+    Some(false))
+  val partitioningParam: ParamDef = ParamDef(
+    "partitioning",
+    "Row partitioning with part_count: hashcode (co-locate equal rows) or random",
+    Some("hashcode"))
+  val mergeSchemaParam: ParamDef = ParamDef(
+    "merge_schema",
+    "Union the schemas of all files (schema evolution; columns absent in a file read as null)",
+    Some(false))
+  val writeColumnsParam: ParamDef = ParamDef("columns", "Columns to write; '_' skips a column")
+  def codecParam(default: String): ParamDef =
+    ParamDef("codec", "Compression codec", Some(default))
+
   /** First-level "subdirectories" under a path, for sub_dirs loads. */
   def subDirs(spark: SparkSession, path: String): Seq[String] = {
     val p = new Path(path)
@@ -33,34 +54,39 @@ private[adapters] object HadoopFiles {
   }
 
   /** sub_dirs-aware load: one stream per first-level subdir, else one
-    * stream under the task name.
-    *
-    * `partitioning` mirrors the reference's record-keying modes
-    * (SURVEY §1.4, Partitioning.HASHCODE/RANDOM): `hashcode` hash-
-    * partitions rows on all columns (equal rows co-locate,
-    * distribution-equivalent to keying every record by hashCode),
-    * `random` round-robins. */
+    * stream under the task name. Each stream gets the `columns` select,
+    * then the `partitioning`; the select comes first because `hashcode`
+    * hashes the selected columns. */
   def loadStreams(
       spark: SparkSession,
       path: String,
       name: String,
       partCount: Int,
       conf: AdapterConf)(read: String => DataFrame): ListMap[String, DataFrame] = {
-    def part(df: DataFrame): DataFrame =
-      if (partCount <= 0) df
-      else conf.str("partitioning", "hashcode") match {
-        case "random" => df.repartition(partCount)
-        case "hashcode" =>
-          df.repartition(partCount, org.apache.spark.sql.functions.hash(
-            df.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
-        case other => throw new IllegalArgumentException(
-          s"partitioning must be 'hashcode' or 'random', got '$other'")
-      }
+    def load(p: String): DataFrame = {
+      val df = read(p)
+      partition(conf.strSeq("columns").fold(df)(cols => df.select(cols.map(col): _*)),
+        partCount, conf)
+    }
     if (conf.bool("sub_dirs", dflt = false)) {
       val subs = subDirs(spark, path)
-      ListMap(subs.map(s => s"$name/$s" -> part(read(s"$path/$s"))): _*)
-    } else ListMap(name -> part(read(path)))
+      ListMap(subs.map(s => s"$name/$s" -> load(s"$path/$s")): _*)
+    } else ListMap(name -> load(path))
   }
+
+  /** `part_count` repartitioning under `partitioning`, which mirrors the
+    * reference's record-keying modes (SURVEY §1.4,
+    * Partitioning.HASHCODE/RANDOM): `hashcode` hash-partitions rows on
+    * all columns (equal rows co-locate, distribution-equivalent to keying
+    * every record by hashCode), `random` round-robins. */
+  def partition(df: DataFrame, partCount: Int, conf: AdapterConf): DataFrame =
+    if (partCount <= 0) df
+    else conf.str("partitioning", "hashcode") match {
+      case "random" => df.repartition(partCount)
+      case "hashcode" => df.repartition(partCount, hash(df.columns.map(col).toIndexedSeq: _*))
+      case other => throw new IllegalArgumentException(
+        s"partitioning must be 'hashcode' or 'random', got '$other'")
+    }
 
   /** Shared `path_filter` param: a name glob over the objects under the
     * path. This is also the supported recipe for a prefix mixing
@@ -72,12 +98,13 @@ private[adapters] object HadoopFiles {
     "Glob over file names; only matching objects are read (e.g. '*.parquet' — " +
       "serve a mixed-format prefix with one task per format)")
 
-  /** Apply `path_filter` to a reader (Spark's pathGlobFilter matches the
-    * file NAME, like the reference's per-object suffix check). */
-  def filtered(
-      r: org.apache.spark.sql.DataFrameReader,
-      conf: AdapterConf): org.apache.spark.sql.DataFrameReader =
-    conf.str("path_filter").map(g => r.option("pathGlobFilter", g)).getOrElse(r)
+  /** The reader every file input starts from: `recursive` and
+    * `path_filter` applied (Spark's pathGlobFilter matches the file NAME,
+    * like the reference's per-object suffix check). */
+  def reader(spark: SparkSession, conf: AdapterConf): DataFrameReader = {
+    val r = spark.read.option("recursiveFileLookup", conf.bool("recursive", dflt = false))
+    conf.str("path_filter").fold(r)(g => r.option("pathGlobFilter", g))
+  }
 
   /** Resolve an output `columns` list against the frame: `_` entries skip
     * the column (JdbcColumnarOutput.java:100-118 semantics). */
@@ -183,6 +210,13 @@ private[adapters] object HadoopFiles {
   }
 }
 
+/** A file verb over a self-describing format (the schema lives in the
+  * files): Spark reads and writes it by format name alone, which is what
+  * a streaming task needs. */
+trait SelfDescribingFormat {
+  def format: String
+}
+
 final class HadoopColumnarInput extends InputAdapter {
   val meta: AdapterMeta = AdapterMeta(
     "hadoopColumnar",
@@ -192,10 +226,10 @@ final class HadoopColumnarInput extends InputAdapter {
       ParamDef("delimiter", "Column delimiter", Some("\t")),
       ParamDef("schema_from_file", "Read schema from the file header line", Some(true)),
       ParamDef("schema_default", "Explicit column list; '_' skips a position"),
-      ParamDef("columns", "Columns to select (subset, any order)"),
-      ParamDef("sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false)),
-      ParamDef("recursive", "Recurse into nested directories (the reference's S3 prefix listing is recursive)", Some(false)),
-      ParamDef("partitioning", "Row partitioning with part_count: hashcode (co-locate equal rows) or random", Some("hashcode")),
+      HadoopFiles.columnsParam,
+      HadoopFiles.subDirsParam,
+      HadoopFiles.recursiveParam,
+      HadoopFiles.partitioningParam,
       ParamDef("per_file_schema",
         "Read each file's own header (files may order/name columns differently; " +
           "union by name)", Some(false)),
@@ -208,58 +242,49 @@ final class HadoopColumnarInput extends InputAdapter {
       partCount: Int,
       conf: AdapterConf): ListMap[String, DataFrame] =
     HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
-      val delim = conf.str("delimiter", "\t")
       val fromHeader = conf.bool("schema_from_file", dflt = true)
-      val reader = HadoopFiles.filtered(
-        spark.read
-          .option("recursiveFileLookup", conf.bool("recursive", dflt = false))
-          .option("sep", delim)
-          .option("header", fromHeader && conf.strSeq("schema_default").isEmpty),
-        conf)
+      val reader = HadoopFiles.reader(spark, conf)
+        .option("sep", conf.str("delimiter", "\t"))
+        .option("header", fromHeader && conf.strSeq("schema_default").isEmpty)
       // Reference semantics edge case (S3DirectColumnarInputStream.java:33-42):
       // the header of EACH object is honored, so files under one prefix may
       // order (or subset) their columns differently. Spark's CSV source
       // assumes one schema per load, so this mode reads per file and
       // unions by name. Driver-side listing — same as the reference's own
       // driver listObjects — so intended for moderate file counts.
-      val df =
-        if (fromHeader && conf.bool("per_file_schema", dflt = false)) {
-          val fsPath = new Path(p)
-          val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val nameOk: Path => Boolean = conf.str("path_filter") match {
-            case Some(g) =>
-              val gf = new org.apache.hadoop.fs.GlobFilter(g)
-              pp => gf.accept(pp)
-            case None => _ => true
-          }
-          val files =
-            if (fs.getFileStatus(fsPath).isDirectory)
-              fs.listStatus(fsPath).toSeq.filter(_.isFile)
-                .filter(st => nameOk(st.getPath))
-                .map(_.getPath.toString).sorted
-            else Seq(p)
-          files.map(reader.csv(_))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-        } else conf.strSeq("schema_default") match {
-          case Some(schema) =>
-            // Positional names; '_' placeholders become unique throwaway
-            // names and are dropped after the scan (Catalyst prunes them
-            // out of the parse).
-            val named = schema.zipWithIndex.map {
-              case ("_", i) => s"__skip_$i"
-              case (n, _) => n
-            }
-            val st = StructType(named.map(StructField(_, StringType, nullable = true)))
-            reader.schema(st).csv(p)
-              .drop(named.filter(_.startsWith("__skip_")): _*)
-          case None =>
-            // Columnar delimited text is untyped in the reference: every
-            // value is a String (S3DirectColumnarInputStream.java:80-88).
-            reader.option("inferSchema", "false").csv(p)
+      if (fromHeader && conf.bool("per_file_schema", dflt = false)) {
+        val fsPath = new Path(p)
+        val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val nameOk: Path => Boolean = conf.str("path_filter") match {
+          case Some(g) =>
+            val gf = new org.apache.hadoop.fs.GlobFilter(g)
+            pp => gf.accept(pp)
+          case None => _ => true
         }
-      conf.strSeq("columns") match {
-        case Some(cols) => df.select(cols.map(col): _*)
-        case None => df
+        val files =
+          if (fs.getFileStatus(fsPath).isDirectory)
+            fs.listStatus(fsPath).toSeq.filter(_.isFile)
+              .filter(st => nameOk(st.getPath))
+              .map(_.getPath.toString).sorted
+          else Seq(p)
+        files.map(reader.csv(_))
+          .reduce(_.unionByName(_, allowMissingColumns = true))
+      } else conf.strSeq("schema_default") match {
+        case Some(schema) =>
+          // Positional names; '_' placeholders become unique throwaway
+          // names and are dropped after the scan (Catalyst prunes them
+          // out of the parse).
+          val named = schema.zipWithIndex.map {
+            case ("_", i) => s"__skip_$i"
+            case (n, _) => n
+          }
+          val st = StructType(named.map(StructField(_, StringType, nullable = true)))
+          reader.schema(st).csv(p)
+            .drop(named.filter(_.startsWith("__skip_")): _*)
+        case None =>
+          // Columnar delimited text is untyped in the reference: every
+          // value is a String (S3DirectColumnarInputStream.java:80-88).
+          reader.option("inferSchema", "false").csv(p)
       }
     }
 }
@@ -269,10 +294,8 @@ final class HadoopTextInput extends InputAdapter {
     "hadoopText",
     "Plain text files, one record per line",
     Seq("file:/data/in", "hdfs:///data/in", "s3a://bucket/prefix"),
-    Seq(ParamDef("sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false)),
-      ParamDef("recursive", "Recurse into nested directories (the reference's S3 prefix listing is recursive)", Some(false)),
-      ParamDef("partitioning", "Row partitioning with part_count: hashcode (co-locate equal rows) or random", Some("hashcode")),
-      HadoopFiles.pathFilterParam))
+    Seq(HadoopFiles.subDirsParam, HadoopFiles.recursiveParam,
+      HadoopFiles.partitioningParam, HadoopFiles.pathFilterParam))
 
   def load(
       spark: SparkSession,
@@ -281,25 +304,22 @@ final class HadoopTextInput extends InputAdapter {
       partCount: Int,
       conf: AdapterConf): ListMap[String, DataFrame] =
     HadoopFiles.loadStreams(spark, path, name, partCount, conf)(
-      HadoopFiles.filtered(
-        spark.read.option("recursiveFileLookup", conf.bool("recursive", dflt = false)),
-        conf).text(_))
+      HadoopFiles.reader(spark, conf).text(_))
 }
 
-final class HadoopParquetInput extends InputAdapter {
+/** Parquet, JSON-lines and ORC files: one input for every
+  * self-describing format, which declares `merge_schema` where the
+  * format can merge schemas. */
+final class HadoopFileInput(
+    verb: String, descr: String, val format: String, mergeSchema: Boolean)
+    extends InputAdapter with SelfDescribingFormat {
   val meta: AdapterMeta = AdapterMeta(
-    "hadoopParquet",
-    "Parquet files (schema carried by the files; vectorized scan)",
+    verb,
+    descr,
     Seq("file:/data/in", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("columns", "Columns to select (subset, any order)"),
-      ParamDef("sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false)),
-      ParamDef("recursive", "Recurse into nested directories (the reference's S3 prefix listing is recursive)", Some(false)),
-      ParamDef("merge_schema",
-        "Union the schemas of all files (schema evolution; columns absent in a file read as null)",
-        Some(false)),
-      ParamDef("partitioning", "Row partitioning with part_count: hashcode (co-locate equal rows) or random", Some("hashcode")),
-      HadoopFiles.pathFilterParam))
+    Seq(HadoopFiles.columnsParam, HadoopFiles.subDirsParam, HadoopFiles.recursiveParam) ++
+      Option.when(mergeSchema)(HadoopFiles.mergeSchemaParam) ++
+      Seq(HadoopFiles.partitioningParam, HadoopFiles.pathFilterParam))
 
   def load(
       spark: SparkSession,
@@ -308,113 +328,61 @@ final class HadoopParquetInput extends InputAdapter {
       partCount: Int,
       conf: AdapterConf): ListMap[String, DataFrame] =
     HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
-      val df = HadoopFiles.filtered(
-        spark.read
-          .option("recursiveFileLookup", conf.bool("recursive", dflt = false))
-          .option("mergeSchema", conf.bool("merge_schema", dflt = false)),
-        conf)
-        .parquet(p)
-      conf.strSeq("columns") match {
-        case Some(cols) => df.select(cols.map(col): _*)
-        case None => df
-      }
+      val r = HadoopFiles.reader(spark, conf)
+      val merged =
+        if (mergeSchema) r.option("mergeSchema", conf.bool("merge_schema", dflt = false))
+        else r
+      merged.format(format).load(p)
     }
 }
 
-final class HadoopJsonInput extends InputAdapter {
+/** Parquet, JSON-lines and ORC sinks: one writer, parameterized by the
+  * format and its codec default. `bucketed` declares the `bucket_by`
+  * params (parquet). */
+final class HadoopFileOutput(
+    verb: String, descr: String, val format: String, codec: String, bucketed: Boolean = false)
+    extends OutputAdapter with SelfDescribingFormat {
   val meta: AdapterMeta = AdapterMeta(
-    "hadoopJson",
-    "JSON-lines files (schema inferred or projected)",
-    Seq("file:/data/in", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("columns", "Columns to select (subset, any order)"),
-      ParamDef("sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false)),
-      ParamDef("recursive", "Recurse into nested directories (the reference's S3 prefix listing is recursive)", Some(false)),
-      ParamDef("partitioning", "Row partitioning with part_count: hashcode (co-locate equal rows) or random", Some("hashcode")),
-      HadoopFiles.pathFilterParam))
-
-  def load(
-      spark: SparkSession,
-      path: String,
-      name: String,
-      partCount: Int,
-      conf: AdapterConf): ListMap[String, DataFrame] =
-    HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
-      val df = HadoopFiles.filtered(
-        spark.read
-          .option("recursiveFileLookup", conf.bool("recursive", dflt = false)),
-        conf).json(p)
-      conf.strSeq("columns") match {
-        case Some(cols) => df.select(cols.map(col): _*)
-        case None => df
-      }
-    }
-}
-
-final class HadoopJsonOutput extends OutputAdapter {
-  val meta: AdapterMeta = AdapterMeta(
-    "hadoopJson",
-    "JSON-lines files",
+    verb,
+    descr,
     Seq("file:/data/out", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("codec", "Compression codec", Some("none")),
-      ParamDef("columns", "Columns to write; '_' skips a column")) ++ HadoopFiles.writeParams)
+    Seq(HadoopFiles.codecParam(codec), HadoopFiles.writeColumnsParam) ++
+      (if (bucketed) HadoopFileOutput.bucketParams else Nil) ++
+      HadoopFiles.writeParams)
 
-  def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit =
-    HadoopFiles.writer(df, conf)
-      .option("compression", conf.str("codec", "none"))
-      .json(OutPath(path, subName))
-}
-
-
-final class HadoopOrcInput extends InputAdapter {
-  val meta: AdapterMeta = AdapterMeta(
-    "hadoopOrc",
-    "ORC files (schema carried by the files; vectorized scan)",
-    Seq("file:/data/in", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("columns", "Columns to select (subset, any order)"),
-      ParamDef("sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false)),
-      ParamDef("recursive", "Recurse into nested directories (the reference's S3 prefix listing is recursive)", Some(false)),
-      ParamDef("merge_schema",
-        "Union the schemas of all files (schema evolution; columns absent in a file read as null)",
-        Some(false)),
-      ParamDef("partitioning", "Row partitioning with part_count: hashcode (co-locate equal rows) or random", Some("hashcode")),
-      HadoopFiles.pathFilterParam))
-
-  def load(
-      spark: SparkSession,
-      path: String,
-      name: String,
-      partCount: Int,
-      conf: AdapterConf): ListMap[String, DataFrame] =
-    HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
-      val df = HadoopFiles.filtered(
-        spark.read
-          .option("recursiveFileLookup", conf.bool("recursive", dflt = false))
-          .option("mergeSchema", conf.bool("merge_schema", dflt = false)),
-        conf)
-        .orc(p)
-      conf.strSeq("columns") match {
-        case Some(cols) => df.select(cols.map(col): _*)
-        case None => df
-      }
+  def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit = {
+    val out = OutPath(path, subName)
+    // bucketed layout is a catalog concept in Spark: the writer
+    // records bucket spec + sort order in the metastore, and every
+    // later join/agg on the bucket columns skips its exchange
+    // (BucketingSpec proves the plan). Data still lands under the
+    // configured path.
+    val bucketing = conf.strSeq("bucket_by").map { cols =>
+      cols -> conf.str("bucket_table").getOrElse(
+        throw new IllegalArgumentException("bucket_by requires bucket_table"))
     }
+    val w = HadoopFiles.writer(df, conf)
+      .option("compression", conf.str("codec", codec))
+      .format(format)
+    bucketing match {
+      case Some((cols, table)) =>
+        w.option("path", out)
+          .bucketBy(conf.int("bucket_count", 8), cols.head, cols.tail: _*)
+          .sortBy(cols.head, cols.tail: _*)
+          .saveAsTable(table)
+      case None => w.save(out)
+    }
+  }
 }
 
-final class HadoopOrcOutput extends OutputAdapter {
-  val meta: AdapterMeta = AdapterMeta(
-    "hadoopOrc",
-    "ORC files (columnar, compressed, splittable)",
-    Seq("file:/data/out", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("codec", "Compression codec", Some("snappy")),
-      ParamDef("columns", "Columns to write; '_' skips a column")) ++ HadoopFiles.writeParams)
-
-  def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit =
-    HadoopFiles.writer(df, conf)
-      .option("compression", conf.str("codec", "snappy"))
-      .orc(OutPath(path, subName))
+private[adapters] object HadoopFileOutput {
+  val bucketParams: Seq[ParamDef] = Seq(
+    ParamDef("bucket_by",
+      "Bucket columns: registers a bucketed+sorted table so equi-joins " +
+        "and aggregations on these columns run exchange-free"),
+    ParamDef("bucket_count", "Bucket count for bucket_by", Some(8)),
+    ParamDef("bucket_table",
+      "Catalog table name for bucket_by (required with bucket_by)"))
 }
 
 private[adapters] object OutPath {
@@ -431,7 +399,7 @@ final class HadoopColumnarOutput extends OutputAdapter {
       ParamDef("delimiter", "Column delimiter", Some("\t")),
       ParamDef("codec", "Compression codec (none/gzip/snappy/...)", Some("none")),
       ParamDef("header", "Write a header line", Some(false)),
-      ParamDef("columns", "Columns to write; '_' skips a column")) ++ HadoopFiles.writeParams)
+      HadoopFiles.writeColumnsParam) ++ HadoopFiles.writeParams)
 
   def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit =
     HadoopFiles.writer(df, conf)
@@ -450,8 +418,8 @@ final class HadoopTextOutput extends OutputAdapter {
     Seq("file:/data/out", "s3a://bucket/prefix"),
     Seq(
       ParamDef("delimiter", "Join delimiter for multi-column frames", Some("\t")),
-      ParamDef("codec", "Compression codec", Some("none")),
-      ParamDef("columns", "Columns to write; '_' skips a column")))
+      HadoopFiles.codecParam("none"),
+      HadoopFiles.writeColumnsParam))
 
   def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit = {
     val selected = HadoopFiles.selectColumns(df, conf)
@@ -465,44 +433,4 @@ final class HadoopTextOutput extends OutputAdapter {
       .option("compression", conf.str("codec", "none"))
       .text(OutPath(path, subName))
   }
-}
-
-final class HadoopParquetOutput extends OutputAdapter {
-  val meta: AdapterMeta = AdapterMeta(
-    "hadoopParquet",
-    "Parquet files (columnar, compressed, splittable)",
-    Seq("file:/data/out", "s3a://bucket/prefix"),
-    Seq(
-      ParamDef("codec", "Compression codec", Some("snappy")),
-      ParamDef("columns", "Columns to write; '_' skips a column"),
-      ParamDef("bucket_by",
-        "Bucket columns: registers a bucketed+sorted table so equi-joins " +
-          "and aggregations on these columns run exchange-free"),
-      ParamDef("bucket_count", "Bucket count for bucket_by", Some(8)),
-      ParamDef("bucket_table",
-        "Catalog table name for bucket_by (required with bucket_by)")) ++
-      HadoopFiles.writeParams)
-
-  def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit =
-    conf.strSeq("bucket_by") match {
-      case Some(cols) =>
-        // bucketed layout is a catalog concept in Spark: the writer
-        // records bucket spec + sort order in the metastore, and every
-        // later join/agg on the bucket columns skips its exchange
-        // (BucketingSpec proves the plan). Data still lands under the
-        // configured path.
-        val table = conf.str("bucket_table").getOrElse(
-          throw new IllegalArgumentException("bucket_by requires bucket_table"))
-        HadoopFiles.writer(df, conf)
-          .option("compression", conf.str("codec", "snappy"))
-          .option("path", OutPath(path, subName))
-          .bucketBy(conf.int("bucket_count", 8), cols.head, cols.tail: _*)
-          .sortBy(cols.head, cols.tail: _*)
-          .format("parquet")
-          .saveAsTable(table)
-      case None =>
-        HadoopFiles.writer(df, conf)
-          .option("compression", conf.str("codec", "snappy"))
-          .parquet(OutPath(path, subName))
-    }
 }

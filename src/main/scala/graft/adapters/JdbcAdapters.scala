@@ -92,10 +92,7 @@ final class JdbcColumnarInput extends InputAdapter {
     "jdbcColumnar",
     "Parallel SELECT from a JDBC source, one range-predicate per partition",
     Seq("jdbc:postgresql://host:5432/db", "jdbc:derby:memory:db"),
-    Seq(
-      ParamDef("driver", "JDBC driver class FQN", required = true),
-      ParamDef("user", "Connection user"),
-      ParamDef("password", "Connection password"),
+    JdbcColumnarInput.connectionParams ++ Seq(
       ParamDef("query",
         "SELECT to execute (wrapped as a derived table); two ? placeholders " +
           "bind each partition's inclusive (start, end) sub-range of " +
@@ -167,19 +164,24 @@ final class JdbcColumnarInput extends InputAdapter {
   }
 }
 
+private[adapters] object JdbcColumnarInput {
+  /** The connection params both jdbcColumnar verbs declare first. */
+  val connectionParams: Seq[ParamDef] = Seq(
+    ParamDef("driver", "JDBC driver class FQN", required = true),
+    ParamDef("user", "Connection user"),
+    ParamDef("password", "Connection password"))
+}
+
 final class JdbcColumnarOutput extends OutputAdapter {
   val meta: AdapterMeta = AdapterMeta(
     "jdbcColumnar",
     "Batched INSERTs into a JDBC table, one connection per partition",
     Seq("jdbc:postgresql://host:5432/db", "jdbc:derby:memory:db"),
-    Seq(
-      ParamDef("driver", "JDBC driver class FQN", required = true),
-      ParamDef("user", "Connection user"),
-      ParamDef("password", "Connection password"),
+    JdbcColumnarInput.connectionParams ++ Seq(
       ParamDef("table", "Destination table (defaults to the stream sub-name)"),
       ParamDef("batch_size", "INSERT batch size", Some(500)),
       ParamDef("mode", "SaveMode: append/overwrite/errorifexists", Some("append")),
-      ParamDef("columns", "Columns to write; '_' skips a column"),
+      HadoopFiles.writeColumnsParam,
       ParamDef("upsert_keys",
         "Comma-separated key columns: write becomes a keyed UPSERT into an " +
           "existing table (exactly-once per key on at-least-once delivery; " +

@@ -35,9 +35,7 @@ final class GraftQueryInput extends InputAdapter {
     Seq(
       ParamDef("query_name",
         "Name of a registered query (see docs/queries.md)", required = true),
-      ParamDef("partitioning",
-        "Row partitioning with part_count: hashcode (co-locate equal rows) or random",
-        Some("hashcode"))))
+      HadoopFiles.partitioningParam))
 
   def load(
       spark: SparkSession,
@@ -60,17 +58,6 @@ final class GraftQueryInput extends InputAdapter {
     // literal dir string — normalize so config and code paths share one
     // cache entry
     val dir = path.stripPrefix("file:")
-    val df = fn(spark, dir)
-    val parted =
-      if (partCount <= 0) df
-      else conf.str("partitioning", "hashcode") match {
-        case "random" => df.repartition(partCount)
-        case "hashcode" => df.repartition(partCount,
-          org.apache.spark.sql.functions.hash(
-            df.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*))
-        case other => throw new IllegalArgumentException(
-          s"partitioning must be 'hashcode' or 'random', got '$other'")
-      }
-    ListMap(name -> parted)
+    ListMap(name -> HadoopFiles.partition(fn(spark, dir), partCount, conf))
   }
 }

@@ -4,6 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.io.ModelStore
+import graft.streaming.Ingest
+
 /** JSON task model, capability-parity with the reference CLI config
   * (reference: datacooker-dist-cli/.../Configuration.java:89-107).
   *
@@ -42,9 +45,8 @@ final case class DistLocation(
   *
   * `"ingest"` (streaming tasks only) names a registered streaming
   * ingest operator — [[graft.streaming.Ingest.ops]] is the single
-  * source of truth for the registry (score / dedup_claim /
-  * gate_contaminated / encode_ivfadc / apply_claims / media_dedup) —
-  * applied to the
+  * source of truth for the registry, and `parse` rejects any other
+  * name — applied to the
   * stream after the optional `transform`; `"model_dir"` points at the
   * corpus the operator's offline models train from (required with
   * `ingest`). A direction of chained ingest tasks runs the whole
@@ -68,8 +70,9 @@ final case class DistLocation(
   * retraining (train-once / apply-everywhere); re-running the export
   * against the same corpus is a no-op. `"model_families"` restricts
   * the export (default: every family in
-  * `graft.io.ModelStore.Families` — restrict when the corpus lacks a
-  * family's inputs, e.g. no embeddings table for `ivfadc`). */
+  * `graft.io.ModelStore.Families`, which `parse` checks it against —
+  * restrict when the corpus lacks a family's inputs, e.g. no
+  * embeddings table for `ivfadc`). */
 final case class DistTask(
     source: DistLocation,
     dest: DistLocation,
@@ -128,14 +131,20 @@ object DistConfig {
         require(task.modelFamilies.isEmpty || task.modelExport,
           s"task in direction '${e.getKey}': 'model_families' only applies " +
             "to a 'model_export' task")
+        // unknown names fail here, before any task of the direction
+        // writes output
+        val badFamilies = task.modelFamilies.filterNot(ModelStore.Families.contains)
+        require(badFamilies.isEmpty,
+          s"task in direction '${e.getKey}': unknown model_families " +
+            s"${badFamilies.mkString(", ")}; exportable: ${ModelStore.Families.mkString(", ")}")
+        require(task.ingest.forall(Ingest.ops.contains),
+          s"task in direction '${e.getKey}': unknown ingest op " +
+            s"'${task.ingest.get}'; registered: ${Ingest.ops.mkString(", ")}")
         // exact op set, not a substring test: apply_claims CONSUMES a
         // ledger and would silently ignore a horizon
-        require(task.horizonMs.isEmpty || task.ingest.exists(
-            Set("dedup_claim", "dedup_simhash_claim", "media_dedup",
-              "url_dedup_claim").contains),
+        require(task.horizonMs.isEmpty || task.ingest.exists(Ingest.claimOps.contains),
           s"task in direction '${e.getKey}': 'horizon_ms' only applies to " +
-            "claim-op ingest tasks (dedup_claim / dedup_simhash_claim / " +
-            "media_dedup / url_dedup_claim)")
+            s"claim-op ingest tasks (${Ingest.claimOps.mkString(" / ")})")
         // fail loudly, at parse time: a batch task with `ingest` set
         // would otherwise copy the data verbatim — the quality/
         // contamination gate silently never runs and the output looks

@@ -3,10 +3,10 @@ package graft.runner
 import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.adapters.{AdapterConf, Adapters}
-import graft.config.{DistConfig, DistTask}
+import graft.adapters.{AdapterConf, Adapters, SelfDescribingFormat}
+import graft.config.{DistConfig, DistLocation, DistTask}
 import graft.io.Sessions
 
 /** Config-driven copy/ETL runner — the reference's single entry point
@@ -106,16 +106,12 @@ object DistMain {
     * sides share, in source-schema order. */
   private def runVerifyTask(
       spark: SparkSession, task: DistTask, direction: String, i: Int): Unit = {
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
-    def loadOne(loc: graft.config.DistLocation, role: String): DataFrame = {
-      val a = Adapters.input(loc.adapter)
-      val streams = a.load(
-        spark, loc.path, loc.subName.getOrElse(s"$direction#$i"),
-        loc.partCount, AdapterConf(a.meta, loc.params))
+    def loadOne(loc: DistLocation, role: String): DataFrame = {
+      val streams = load(spark, loc, direction, i)._2
       require(streams.size == 1,
         s"verify task: $role produced ${streams.size} streams; point it at one")
-      streams.head._2.asInstanceOf[DataFrame]
+      streams.head._2
     }
     val src = loadOne(task.source, "source")
     val dst = loadOne(task.dest, "dest")
@@ -154,14 +150,19 @@ object DistMain {
       s"(rows=${fs._1}, ${cols.size} columns)")
   }
 
+  /** Load one task location through its input adapter. Streams are
+    * named under the location's `name`, by default `direction#i`;
+    * returns that source name with the streams. */
+  private def load(spark: SparkSession, loc: DistLocation, direction: String, i: Int)
+      : (String, ListMap[String, DataFrame]) = {
+    val a = Adapters.input(loc.adapter)
+    val name = loc.subName.getOrElse(s"$direction#$i")
+    name -> a.load(spark, loc.path, name, loc.partCount, AdapterConf(a.meta, loc.params))
+  }
+
   private def runBatchTask(
       spark: SparkSession, task: DistTask, direction: String, i: Int): Unit = {
-    val ia = Adapters.input(task.source.adapter)
-    val inConf = AdapterConf(ia.meta, task.source.params)
-    val sourceName = task.source.subName.getOrElse(s"$direction#$i")
-    val streams: ListMap[String, _] =
-      ia.load(spark, task.source.path, sourceName, task.source.partCount, inConf)
-
+    val (sourceName, streams) = load(spark, task.source, direction, i)
     val oa = Adapters.output(task.dest.adapter)
     val outConf = AdapterConf(oa.meta, task.dest.params)
     streams.foreach { case (streamName, df0) =>
@@ -175,9 +176,9 @@ object DistMain {
       val df = task.transform match {
         case Some(sql) =>
           graft.functions.GraftRuntime.ensure(spark)
-          df0.asInstanceOf[org.apache.spark.sql.DataFrame].createOrReplaceTempView("_input")
+          df0.createOrReplaceTempView("_input")
           spark.sql(sql)
-        case None => df0.asInstanceOf[org.apache.spark.sql.DataFrame]
+        case None => df0
       }
       oa.save(sub, df, task.dest.path, outConf)
     }
@@ -194,15 +195,16 @@ object DistMain {
     * checkpoint under `<dest>/_checkpoint` — re-running the direction
     * processes ONLY files added since the last run (exactly-once
     * incremental backfill; stateless or windowed-append transforms).
-    * Self-describing file formats only. */
-  private val streamFormats = Map(
-    "hadoopParquet" -> "parquet", "hadoopJson" -> "json", "hadoopOrc" -> "orc")
-
+    * Self-describing file formats only: the registry's
+    * [[graft.adapters.SelfDescribingFormat]] verbs. */
   private def runStreamingTask(spark: SparkSession, task: DistTask): Unit = {
-    def fmt(adapter: String): String = streamFormats.getOrElse(adapter,
-      throw new IllegalArgumentException(
-        s"streaming tasks support ${streamFormats.keys.mkString("/")}, got '$adapter'"))
-    val (inFmt, outFmt) = (fmt(task.source.adapter), fmt(task.dest.adapter))
+    def fmt(registry: Map[String, Any], adapter: String): String = {
+      val formats = registry.collect { case (v, a: SelfDescribingFormat) => v -> a.format }
+      formats.getOrElse(adapter, throw new IllegalArgumentException(
+        s"streaming tasks support ${formats.keys.mkString("/")}, got '$adapter'"))
+    }
+    val (inFmt, outFmt) =
+      (fmt(Adapters.inputs, task.source.adapter), fmt(Adapters.outputs, task.dest.adapter))
     val schema = spark.read.format(inFmt).load(task.source.path).schema
     val stream = spark.readStream.format(inFmt).schema(schema).load(task.source.path)
     val transformed = task.transform match {
@@ -230,7 +232,7 @@ object DistMain {
     // [[graft.streaming.Streams.compactClaims]] — a long-running
     // direction's ledger no longer grows without bound. apply_claims
     // reads either layout through claimView.
-    if (task.ingest.exists(claimOps.contains)) {
+    if (task.ingest.exists(graft.streaming.Ingest.claimOps.contains)) {
       // the claim ledger's layout (batch_id-partitioned parquet, read
       // back by apply_claims/claimView) is part of the claim protocol —
       // fail fast on a dest adapter the sink would silently ignore
@@ -264,10 +266,6 @@ object DistMain {
         .awaitTermination()
     }
   }
-
-  /** Ingest ops whose output is a claim LEDGER (bucket, id, keeper). */
-  private val claimOps =
-    Set("dedup_claim", "dedup_simhash_claim", "media_dedup", "url_dedup_claim")
 
   /** Read a (possibly remote) config file through the Hadoop FS API. */
   def readFile(spark: SparkSession, path: String): String = {

@@ -3,39 +3,14 @@ package graft.runner
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.queries.{Bpe, Breadth, Curation, Dedup, Events, Html, LangId, Multimodal, Q, Relational, Sampling, Similarity, TextAnalysis, TpchShapes, Url}
-
 /** Renders the registered query surface to `docs/queries.md` — one row
   * per capability query with its module and verification mode (DuckDB
   * hash oracle vs rows-only). Run after adding queries, like DocGen for
   * adapters. */
 object QueryCatalog {
 
-  private val modules: Seq[(String, Seq[Q])] = Seq(
-    "Relational" -> Relational.queries,
-    "Breadth" -> Breadth.queries,
-    "TpchShapes" -> TpchShapes.queries,
-    "TextAnalysis" -> TextAnalysis.queries,
-    "Dedup" -> Dedup.queries,
-    "Similarity" -> Similarity.queries,
-    "Events" -> Events.queries,
-    "Multimodal" -> Multimodal.queries,
-    "Sampling" -> Sampling.queries,
-    "Bpe" -> Bpe.queries,
-    "Curation" -> Curation.queries,
-    "Html" -> Html.queries,
-    "LangId" -> LangId.queries,
-    "Url" -> Url.queries)
-
-  // the list above is hand-maintained for the module labels; refuse to
-  // render a catalog that silently omits a registered query (this
-  // caught the missing Bpe module once already)
-  require(
-    modules.flatMap(_._2.map(_.name)).toSet == graft.SparkEntry.allQueries.map(_.name).toSet,
-    "QueryCatalog module list is out of sync with SparkEntry.allQueries: missing " +
-      (graft.SparkEntry.allQueries.map(_.name).toSet -- modules.flatMap(_._2.map(_.name))))
-
   def render(): String = {
+    val modules = graft.SparkEntry.modules
     val sb = new StringBuilder
     sb.append("# Query catalog\n\n")
     sb.append("Generated by `graft.runner.QueryCatalog` — do not edit by hand.\n")

@@ -100,6 +100,12 @@ object Ingest {
       "encode_unigram", "extract_html", "langid", "url_filter",
       "url_dedup_claim")
 
+  /** The ops whose output is a claim LEDGER (bucket, id, keeper): their
+    * stages write through the batch_id-partitioned claim sink, and only
+    * they take `horizon_ms`. */
+  val claimOps: Seq[String] =
+    Seq("dedup_claim", "dedup_simhash_claim", "media_dedup", "url_dedup_claim")
+
   def apply(
       spark: SparkSession, op: String, modelDir: String, df: DataFrame,
       horizonMs: Option[Long] = None, lateness: String = "0 seconds"): DataFrame =

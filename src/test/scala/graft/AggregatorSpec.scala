@@ -38,10 +38,10 @@ class AggregatorSpec extends SparkSpec {
   }
 
   test("partitioning=hashcode co-locates equal rows; random round-robins") {
-    val meta = new graft.adapters.HadoopParquetInput().meta
-    def load(mode: String) = new graft.adapters.HadoopParquetInput().load(
+    val in = graft.adapters.Adapters.input("hadoopParquet")
+    def load(mode: String) = in.load(
       spark, s"file:${sf()}/nation.parquet", "n", 3,
-      graft.adapters.AdapterConf(meta, Map("partitioning" -> mode)))("n")
+      graft.adapters.AdapterConf(in.meta, Map("partitioning" -> mode)))("n")
 
     // hashcode: deterministic assignment — same distribution on re-load
     val h1 = load("hashcode").rdd.glom().collect().map(_.length).toSeq

@@ -42,6 +42,11 @@ class DistPipelineSpec extends SparkSpec {
     assert(ok.horizonMs.contains(3600000L) && ok.lateness == "0 seconds")
     assertThrows[IllegalArgumentException](DistConfig.parse(cfg("apply_claims")))
     assertThrows[IllegalArgumentException](DistConfig.parse(cfg("extract_html")))
+    // an unknown op fails at parse, before any task of the direction runs,
+    // and the error names the registered set
+    val unknown = intercept[IllegalArgumentException](DistConfig.parse(cfg("dedup_clam")))
+    assert(unknown.getMessage.contains("unknown ingest op 'dedup_clam'") &&
+      unknown.getMessage.contains(graft.streaming.Ingest.ops.mkString(", ")))
   }
 
   test("parquet -> csv -> parquet round trip preserves rows and projection") {
@@ -194,7 +199,7 @@ class DistPipelineSpec extends SparkSpec {
       .write.parquet(s"file:$base/in/part=a")
     Seq((2L, "bob", 7L)).toDF("id", "name", "extra")
       .write.parquet(s"file:$base/in/part=b")
-    val in = new graft.adapters.HadoopParquetInput()
+    val in = graft.adapters.Adapters.input("hadoopParquet")
     val streams = in.load(
       spark, s"file:$base/in", "m", 0,
       graft.adapters.AdapterConf(in.meta, Map("merge_schema" -> true)))
@@ -210,11 +215,10 @@ class DistPipelineSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$base/in"))
     Files.writeString(Paths.get(s"$base/in/a.csv"), "id\tname\n1\talice\n")
     Files.writeString(Paths.get(s"$base/in/b.csv"), "name\tid\textra\nbob\t2\tx\n")
-    val streams = new graft.adapters.HadoopColumnarInput().load(
+    val in = graft.adapters.Adapters.input("hadoopColumnar")
+    val streams = in.load(
       spark, s"file:$base/in", "h", 0,
-      graft.adapters.AdapterConf(
-        new graft.adapters.HadoopColumnarInput().meta,
-        Map("per_file_schema" -> true)))
+      graft.adapters.AdapterConf(in.meta, Map("per_file_schema" -> true)))
     val df = streams("h")
     assert(df.columns.toSet == Set("id", "name", "extra"))
     val rows = df.selectExpr("id", "name", "coalesce(extra, '-') e")
@@ -610,6 +614,22 @@ class DistPipelineSpec extends SparkSpec {
       .write.mode("append").parquet(s"$base/in")
     DistMain.runDirection(spark, conf.direction("d"), "d")
     assert(spark.read.parquet(s"$base/out").count() == 30)
+  }
+
+  test("streaming task: a non-self-describing verb fails before any job, naming the accepted verbs") {
+    // the source path does not exist: reaching a read would fail with a
+    // missing-path error instead of the verb check
+    def run(source: String, dest: String) = {
+      val conf = DistConfig.parse(s"""{"d": [{"streaming": true,
+        "source": {"adapter": "$source", "path": "file:/nonexistent/in"},
+        "dest":   {"adapter": "$dest", "path": "file:/nonexistent/out"}}]}""")
+      intercept[IllegalArgumentException](
+        DistMain.runDirection(spark, conf.direction("d"), "d")).getMessage
+    }
+    assert(run("hadoopColumnar", "hadoopParquet") ==
+      "streaming tasks support hadoopParquet/hadoopJson/hadoopOrc, got 'hadoopColumnar'")
+    assert(run("hadoopOrc", "hadoopText") ==
+      "streaming tasks support hadoopParquet/hadoopJson/hadoopOrc, got 'hadoopText'")
   }
 
   test("streaming ingest chain: score -> claim -> gate -> apply claims -> IVFADC encode") {
@@ -1072,6 +1092,11 @@ class DistPipelineSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](
       parse("\"model_export\": true, \"streaming\": true,"))
     assertThrows[IllegalArgumentException](parse("\"model_families\": [\"dsir\"],"))
+    // an unknown family fails at parse too, naming the exportable set
+    val unknown = intercept[IllegalArgumentException](
+      parse("\"model_export\": true, \"model_families\": [\"dsir\", \"nope\"],"))
+    assert(unknown.getMessage.contains("unknown model_families nope") &&
+      unknown.getMessage.contains(ModelStore.Families.mkString(", ")))
   }
 
   test("worked example: streaming ingest config end-to-end") {

@@ -19,6 +19,8 @@ class PropertySpec extends SparkSpec {
     Gen.alphaNumStr.map(_.take(8)),
     Gen.oneOf("a,b", "quote\"inside", "tab\there", "semi;colon", "x", "line'quote"))
 
+  private val parquetIn = graft.adapters.Adapters.input("hadoopParquet")
+
   test("CSV write/read round-trips arbitrary cell content (quoting/escaping)") {
     import spark.implicits._
     for (rows <- cases(Gen.listOfN(20, Gen.zip(cell, cell)), 8) if rows.nonEmpty) {
@@ -40,20 +42,18 @@ class PropertySpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 10) {
       val perm = rnd.shuffle(all).take(1 + rnd.nextInt(all.size))
-      val loaded = new graft.adapters.HadoopParquetInput().load(
+      val loaded = parquetIn.load(
         spark, s"file:${sf()}/nation.parquet", "n", 0,
-        graft.adapters.AdapterConf(
-          new graft.adapters.HadoopParquetInput().meta,
-          Map("columns" -> perm)))
+        graft.adapters.AdapterConf(parquetIn.meta, Map("columns" -> perm)))
       assert(loaded("n").columns.toSeq == perm)
     }
   }
 
   test("part_count: output partitions equal the requested count") {
     for (n <- Seq(1, 2, 5, 8)) {
-      val loaded = new graft.adapters.HadoopParquetInput().load(
+      val loaded = parquetIn.load(
         spark, s"file:${sf()}/orders.parquet", "o", n,
-        graft.adapters.AdapterConf(new graft.adapters.HadoopParquetInput().meta, Map.empty))
+        graft.adapters.AdapterConf(parquetIn.meta, Map.empty))
       assert(loaded("o").rdd.getNumPartitions == n)
     }
   }
@@ -103,11 +103,16 @@ class PropertySpec extends SparkSpec {
     verbs.foreach(v => assert(txt.contains(v), s"PDF missing verb $v"))
     val pages = "/Count (\\d+)".r.findFirstMatchIn(txt).get.group(1).toInt
     assert(pages >= 1)
-    // the checked-in artifact must match the live registry render
-    val onDisk = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("docs/adapters.pdf"))
-    assert(java.util.Arrays.equals(onDisk, pdf),
-      "docs/adapters.pdf is stale - run `sbt \"runMain graft.runner.DocGen\"`")
+    // the checked-in artifacts must match the live registry render
+    def assertFresh(file: String, rendered: Array[Byte]): Unit = {
+      val onDisk = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
+      assert(java.util.Arrays.equals(onDisk, rendered),
+        s"$file is stale - run `sbt \"runMain graft.runner.DocGen\"`")
+    }
+    assertFresh("docs/adapters.pdf", pdf)
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    assertFresh("docs/adapters.md", DocGen.render().getBytes(utf8))
+    assertFresh("docs/adapters.html", DocGen.renderHtml().getBytes(utf8))
   }
 
   test("every adapter verb has a runnable generated example config") {
