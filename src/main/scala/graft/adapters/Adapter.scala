@@ -42,14 +42,25 @@ final case class AdapterConf(meta: AdapterMeta, raw: Map[String, Any]) {
   def str(name: String): Option[String] = get(name).map(String.valueOf)
   def str(name: String, dflt: String): String = str(name).getOrElse(dflt)
   def int(name: String, dflt: Int): Int = get(name) match {
-    case Some(n: Number) => n.intValue()
-    case Some(s: String) => s.toInt
-    case _ => dflt
+    case Some(n: Int) => n
+    case Some(n: Long) if n.isValidInt => n.toInt
+    case Some(s: String) => s.trim.toIntOption.getOrElse(invalid(name, "an integer", s))
+    case None | Some(null) => dflt
+    case Some(v) => invalid(name, "an integer", v)
   }
   def bool(name: String, dflt: Boolean): Boolean = get(name) match {
     case Some(b: Boolean) => b
-    case Some(s: String) => s.toBoolean
-    case _ => dflt
+    case Some(s: String) => s.trim.toBooleanOption.getOrElse(invalid(name, "true or false", s))
+    case None | Some(null) => dflt
+    case Some(v) => invalid(name, "true or false", v)
+  }
+
+  private def invalid(name: String, expected: String, got: Any): Nothing = {
+    val shown = got match {
+      case s: String => "\"" + s + "\""
+      case other => String.valueOf(other)
+    }
+    throw new IllegalArgumentException(s"${meta.verb} $name: expected $expected, got $shown")
   }
   def strSeq(name: String): Option[Seq[String]] = get(name) match {
     case Some(s: Seq[_]) => Some(s.map(String.valueOf))

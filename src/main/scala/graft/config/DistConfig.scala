@@ -102,21 +102,23 @@ object DistConfig {
     val root = om.readTree(json)
     require(root.isObject, "Config root must be a JSON object of directions")
     val dirs = root.properties().asScala.map { e =>
-      val tasks = e.getValue.elements().asScala.map { t =>
+      val tasks = e.getValue.elements().asScala.zipWithIndex.map { case (t, i) =>
+        // the task's default stream name in DistMain
+        val where = s"task ${e.getKey}#$i"
         val task = DistTask(
-          location(t, "source"),
-          location(t, "dest"),
+          location(t, "source", where),
+          location(t, "dest", where),
           Option(t.get("transform")).map(_.asText()),
-          Option(t.get("streaming")).exists(_.asBoolean()),
-          Option(t.get("verify")).exists(_.asBoolean()),
+          bool(t, "streaming", where),
+          bool(t, "verify", where),
           Option(t.get("verify_columns"))
             .map(_.elements().asScala.map(_.asText()).toSeq)
             .getOrElse(Seq.empty),
           Option(t.get("ingest")).map(_.asText()),
           Option(t.get("model_dir")).map(_.asText()),
-          Option(t.get("horizon_ms")).map(_.asLong()),
+          integral(t, "horizon_ms", where, _.canConvertToLong).map(_.longValue()),
           Option(t.get("lateness")).map(_.asText()).getOrElse("0 seconds"),
-          Option(t.get("model_export")).exists(_.asBoolean()),
+          bool(t, "model_export", where),
           Option(t.get("model_families"))
             .map(_.elements().asScala.map(_.asText()).toSeq)
             .getOrElse(Seq.empty))
@@ -126,24 +128,24 @@ object DistConfig {
         // one of the two semantics
         require(!task.modelExport || (!task.streaming && !task.verify &&
             task.ingest.isEmpty && task.transform.isEmpty),
-          s"task in direction '${e.getKey}': 'model_export' is a standalone " +
+          s"$where: 'model_export' is a standalone " +
             "batch task and cannot combine with streaming/ingest/verify/transform")
         require(task.modelFamilies.isEmpty || task.modelExport,
-          s"task in direction '${e.getKey}': 'model_families' only applies " +
+          s"$where: 'model_families' only applies " +
             "to a 'model_export' task")
         // unknown names fail here, before any task of the direction
         // writes output
         val badFamilies = task.modelFamilies.filterNot(ModelStore.Families.contains)
         require(badFamilies.isEmpty,
-          s"task in direction '${e.getKey}': unknown model_families " +
+          s"$where: unknown model_families " +
             s"${badFamilies.mkString(", ")}; exportable: ${ModelStore.Families.mkString(", ")}")
         require(task.ingest.forall(Ingest.ops.contains),
-          s"task in direction '${e.getKey}': unknown ingest op " +
+          s"$where: unknown ingest op " +
             s"'${task.ingest.get}'; registered: ${Ingest.ops.mkString(", ")}")
         // exact op set, not a substring test: apply_claims CONSUMES a
         // ledger and would silently ignore a horizon
         require(task.horizonMs.isEmpty || task.ingest.exists(Ingest.claimOps.contains),
-          s"task in direction '${e.getKey}': 'horizon_ms' only applies to " +
+          s"$where: 'horizon_ms' only applies to " +
             s"claim-op ingest tasks (${Ingest.claimOps.mkString(" / ")})")
         // fail loudly, at parse time: a batch task with `ingest` set
         // would otherwise copy the data verbatim — the quality/
@@ -151,7 +153,7 @@ object DistConfig {
         // plausible (ADVICE r16). Matches the streaming path's
         // model_dir check in posture.
         require(task.ingest.isEmpty || task.streaming,
-          s"task in direction '${e.getKey}': 'ingest' (${task.ingest.get}) " +
+          s"$where: 'ingest' (${task.ingest.get}) " +
             "requires '\"streaming\": true' — a batch task would ignore it " +
             "and copy the data unprocessed")
         task
@@ -161,15 +163,35 @@ object DistConfig {
     DistConfig(dirs)
   }
 
-  private def location(task: JsonNode, field: String): DistLocation = {
+  /** A JSON boolean, false when absent. Jackson's `asBoolean` would read
+    * `"yes"` (or any other non-boolean) as false, silently. */
+  private def bool(n: JsonNode, field: String, where: String): Boolean =
+    Option(n.get(field)).exists { v =>
+      if (!v.isBoolean) throw new IllegalArgumentException(
+        s"$where: '$field' must be a JSON boolean (true/false), got $v")
+      v.booleanValue()
+    }
+
+  /** A JSON integer that `fits`, when present. Jackson's `asInt`/`asLong`
+    * would read `"four"` as 0 and truncate 2.5 to 2, silently. */
+  private def integral(n: JsonNode, field: String, where: String,
+      fits: JsonNode => Boolean): Option[JsonNode] =
+    Option(n.get(field)).map { v =>
+      if (!v.isIntegralNumber || !fits(v)) throw new IllegalArgumentException(
+        s"$where: '$field' must be a JSON integer, got $v")
+      v
+    }
+
+  private def location(task: JsonNode, field: String, where: String): DistLocation = {
     val n = Option(task.get(field)).getOrElse(
-      throw new IllegalArgumentException(s"Task is missing required '$field'"))
+      throw new IllegalArgumentException(s"$where is missing required '$field'"))
     def req(k: String): String = Option(n.get(k)).map(_.asText()).getOrElse(
-      throw new IllegalArgumentException(s"'$field' is missing required '$k'"))
+      throw new IllegalArgumentException(s"$where $field is missing required '$k'"))
     DistLocation(
       adapter = req("adapter"),
       path = req("path"),
-      partCount = Option(n.get("part_count")).map(_.asInt()).getOrElse(0),
+      partCount = integral(n, "part_count", s"$where $field", _.canConvertToInt)
+        .map(_.intValue()).getOrElse(0),
       subName = Option(n.get("name")).map(_.asText()),
       params = Option(n.get("params")).map(any(_).asInstanceOf[Map[String, Any]])
         .getOrElse(Map.empty))

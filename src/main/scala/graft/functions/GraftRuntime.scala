@@ -12,9 +12,10 @@ import graft.plans.AsOfJoinStrategy
   * does), but a host application may hand us its own session — this
   * makes every entry point self-healing there: the native functions go
   * into the session function registry and the as-of strategy into
-  * `spark.experimental.extraStrategies` (both public, runtime-safe,
-  * idempotent). Also flips the nanos-timestamp legacy flag the harness
-  * events table needs.
+  * `spark.experimental.extraStrategies`, and the ASCII case-mapping
+  * rewrite ([[CaseMappingRule]]) into `spark.experimental.extraOptimizations`
+  * (all public, runtime-safe, idempotent). Also flips the
+  * nanos-timestamp legacy flag the harness events table needs.
   */
 object GraftRuntime {
 
@@ -142,5 +143,8 @@ object GraftRuntime {
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    if (!spark.experimental.extraOptimizations.contains(CaseMappingRule))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ CaseMappingRule
   }
 }

@@ -79,7 +79,7 @@ case class DotProductF(left: Expression, right: Expression)
   * `spark.sql.extensions=graft.functions.GraftExtensions` (wired in
   * [[graft.io.Sessions]]). Registers the native SQL functions so plans
   * can use them from both the DataFrame API (`expr("dot_f(a, b)")`) and
-  * plain SQL. */
+  * plain SQL, the as-of join strategy, and [[CaseMappingRule]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -225,5 +225,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ZOrder2].getName, "zorder2"),
       (children: Seq[Expression]) => ZOrder2(children(0), children(1))))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectPostHocResolutionRule(_ => CaseMappingRule)
   }
 }

@@ -15,7 +15,17 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: the harness `events`
   *    table stores TIMESTAMP(NANOS) which Spark 4 otherwise refuses
   *    (PARQUET_TYPE_ILLEGAL); we read the raw ns longs and convert in
-  *    [[Tables]].
+  *    [[Tables]];
+  *  - `spark.sql.codegen.cache.maxEntries=4000` (static, JVM-wide; Spark's
+  *    default is 100): the generated-class cache must hold a whole pass.
+  *    One `Bench` sf0.1 run (239 queries, three passes, one JVM) needs
+  *    2,930 distinct classes (counted with an unbounded cache). At 100
+  *    entries it compiled 7,420, because classes were evicted and
+  *    recompiled within and across passes; at 4000 it compiled 2,921,
+  *    and the run's min-merge went from 198.7 s to 137.2 s (4 vCPUs,
+  *    one run each). The cost is the retained classes and their source
+  *    text: metaspace in use at exit 169 → 190 MB, peak RSS 3.84 →
+  *    4.26 GB (`-Xmx6g`).
   */
 object Sessions {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -33,6 +43,7 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-warehouse")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       // BloomFilterAggregate (the decontamination scale branch) silently
       // clamps its (numItems, numBits) arguments to these confs — the
       // defaults (4M items / 64M bits) kick in exactly when the eval set

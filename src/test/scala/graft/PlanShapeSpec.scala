@@ -972,4 +972,38 @@ class PlanShapeSpec extends SparkSpec {
     assert(gatePlan.collect { case g: Generate => g }.isEmpty,
       "gateContaminated must not explode — the native bloom_hits loop replaced it")
   }
+
+  test("DistMain transform: lower(...) is the ASCII fast path already in the analyzed plan") {
+    // the analyzed plan, not the optimized one: DistMain's GraftRuntime.ensure
+    // also adds the rule as an extra optimizer rule, which would hide a
+    // session factory that lost GraftExtensions or its post-hoc rule
+    import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.functions.AsciiFastCase
+    val analyzed = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = analyzed.add(qe.analyzed)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val base = tmpDir("case-plan")
+    spark.listenerManager.register(listener)
+    try {
+      val conf = graft.config.DistConfig.parse(s"""{"d": [{
+        "source": {"adapter": "hadoopParquet", "path": "file:${sf()}/nation.parquet"},
+        "transform": "SELECT n_nationkey, lower(n_name) AS l FROM _input",
+        "dest": {"adapter": "hadoopParquet", "path": "file:$base/out"}}]}""")
+      graft.runner.DistMain.runDirection(spark, conf.direction("d"), "d")
+      def cased(p: LogicalPlan) = p.collectWithSubqueries { case n =>
+        n.expressions.flatMap(_.collect { case e @ (_: Lower | _: Upper | _: AsciiFastCase) => e })
+      }.flatten
+      // the write's plan (the view registration reports first)
+      val plan = Iterator.continually(analyzed.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map(p => Option(p).getOrElse(fail("the DistMain write reported no query execution")))
+        .find(cased(_).nonEmpty).get
+      assert(cased(plan).forall(_.isInstanceOf[AsciiFastCase]),
+        s"lower(...) in a DistMain transform must analyze to AsciiFastCase:\n$plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
