@@ -16,7 +16,7 @@ import graft.streaming.Ingest
   *     { "source": {"adapter": "hadoopColumnar", "path": "...",
   *                  "part_count": 4, "name": "optional",
   *                  "params": {"delimiter": ",", ...}},
-  *       "dest":   {"adapter": "parquet", "path": "...", "params": {}} } ] }
+  *       "dest":   {"adapter": "hadoopParquet", "path": "...", "params": {}} } ] }
   * }}}
   *
   * Params stay loosely typed (`Map[String, Any]`) exactly like the
@@ -108,20 +108,16 @@ object DistConfig {
         val task = DistTask(
           location(t, "source", where),
           location(t, "dest", where),
-          Option(t.get("transform")).map(_.asText()),
+          str(t, "transform", where),
           bool(t, "streaming", where),
           bool(t, "verify", where),
-          Option(t.get("verify_columns"))
-            .map(_.elements().asScala.map(_.asText()).toSeq)
-            .getOrElse(Seq.empty),
-          Option(t.get("ingest")).map(_.asText()),
-          Option(t.get("model_dir")).map(_.asText()),
+          strings(t, "verify_columns", where),
+          str(t, "ingest", where),
+          str(t, "model_dir", where),
           integral(t, "horizon_ms", where, _.canConvertToLong).map(_.longValue()),
-          Option(t.get("lateness")).map(_.asText()).getOrElse("0 seconds"),
+          str(t, "lateness", where).getOrElse("0 seconds"),
           bool(t, "model_export", where),
-          Option(t.get("model_families"))
-            .map(_.elements().asScala.map(_.asText()).toSeq)
-            .getOrElse(Seq.empty))
+          strings(t, "model_families", where))
         // model_export is a self-contained batch verb (source = the
         // training corpus, dest = the artifact dir): combining it with
         // streaming/ingest/verify/transform would silently apply only
@@ -133,6 +129,18 @@ object DistConfig {
         require(task.modelFamilies.isEmpty || task.modelExport,
           s"$where: 'model_families' only applies " +
             "to a 'model_export' task")
+        // fields the task's kind never reads fail too: DistMain runs a
+        // verify task before looking at transform or streaming, and a
+        // streaming task reads only each location's adapter and path
+        require(!task.verify || (task.transform.isEmpty && !task.streaming),
+          s"$where: a 'verify' task compares the two locations as stored " +
+            "and cannot combine with transform/streaming")
+        require(task.verifyColumns.isEmpty || task.verify,
+          s"$where: 'verify_columns' only applies to a 'verify' task")
+        for ((role, loc) <- Seq("source" -> task.source, "dest" -> task.dest))
+          require(!task.streaming || (loc.partCount == 0 && loc.params.isEmpty),
+            s"$where $role: a streaming task reads only 'adapter' and 'path', " +
+              "so 'part_count' and 'params' would be ignored")
         // unknown names fail here, before any task of the direction
         // writes output
         val badFamilies = task.modelFamilies.filterNot(ModelStore.Families.contains)
@@ -172,6 +180,25 @@ object DistConfig {
       v.booleanValue()
     }
 
+  /** A JSON string, when present. Jackson's `asText` would read `null`
+    * as the text "null" (a relative path, a SQL statement), silently. */
+  private def str(n: JsonNode, field: String, where: String): Option[String] =
+    Option(n.get(field)).map { v =>
+      if (!v.isTextual) throw new IllegalArgumentException(
+        s"$where: '$field' must be a JSON string, got $v")
+      v.textValue()
+    }
+
+  /** A JSON array of strings, empty when absent. `elements()` of a bare
+    * string is empty, which would read as "no restriction", silently. */
+  private def strings(n: JsonNode, field: String, where: String): Seq[String] =
+    Option(n.get(field)).map { v =>
+      if (!v.isArray || !v.elements().asScala.forall(_.isTextual))
+        throw new IllegalArgumentException(
+          s"$where: '$field' must be a JSON array of strings, got $v")
+      v.elements().asScala.map(_.textValue()).toSeq
+    }.getOrElse(Seq.empty)
+
   /** A JSON integer that `fits`, when present. Jackson's `asInt`/`asLong`
     * would read `"four"` as 0 and truncate 2.5 to 2, silently. */
   private def integral(n: JsonNode, field: String, where: String,
@@ -185,14 +212,14 @@ object DistConfig {
   private def location(task: JsonNode, field: String, where: String): DistLocation = {
     val n = Option(task.get(field)).getOrElse(
       throw new IllegalArgumentException(s"$where is missing required '$field'"))
-    def req(k: String): String = Option(n.get(k)).map(_.asText()).getOrElse(
+    def req(k: String): String = str(n, k, s"$where $field").getOrElse(
       throw new IllegalArgumentException(s"$where $field is missing required '$k'"))
     DistLocation(
       adapter = req("adapter"),
       path = req("path"),
       partCount = integral(n, "part_count", s"$where $field", _.canConvertToInt)
         .map(_.intValue()).getOrElse(0),
-      subName = Option(n.get("name")).map(_.asText()),
+      subName = str(n, "name", s"$where $field"),
       params = Option(n.get("params")).map(any(_).asInstanceOf[Map[String, Any]])
         .getOrElse(Map.empty))
   }

@@ -56,29 +56,6 @@ object KernelMemo {
       m
     }
 
-  /** Thread-local memo bypass: inside `bypassed { ... }`, [[rebuild]]
-    * and [[reuse]] return the raw build LAZILY (no checkpoint, no memo
-    * write). For callers that need the kernel's PLAN, not its data —
-    * the plan-shape gates must see the real pipeline, and an eager
-    * checkpoint per inspected query would also turn plan construction
-    * into a materialization. Thread-local (not global) so parallel
-    * test suites can't disable each other's memoization. */
-  private val bypass = ThreadLocal.withInitial[java.lang.Boolean](() => false)
-
-  def bypassed[T](f: => T): T = {
-    // re-entrant: restore the PREVIOUS value, not `false` — a nested
-    // bypassed block inside a plan-gate helper must not re-enable
-    // memoization for the remainder of the outer block (ADVICE r12)
-    val prev = bypass.get()
-    bypass.set(true)
-    try f finally bypass.set(prev)
-  }
-
-  /** True inside a [[bypassed]] block — lets plan-adjacent helpers
-    * (e.g. `Similarity.localizedModel`) stay execution-free during plan
-    * extraction. */
-  def isBypassed: Boolean = bypass.get()
-
   private def checkpointed(s: SparkSession, built: DataFrame): DataFrame = {
     if (s.sparkContext.getCheckpointDir.isEmpty) {
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
@@ -101,7 +78,6 @@ object KernelMemo {
     * the designated builder query's entry point. */
   def rebuild(s: SparkSession, dir: String, kernel: String)(
       build: => DataFrame): DataFrame = {
-    if (bypass.get()) return build
     val ck = checkpointed(s, build)
     sessionFrames(s).put((dir, kernel), ck)
     ck
@@ -113,7 +89,6 @@ object KernelMemo {
     * of writing a second one. */
   def reuse(s: SparkSession, dir: String, kernel: String)(
       build: => DataFrame): DataFrame = {
-    if (bypass.get()) return build
     val m = sessionFrames(s)
     val k = (dir, kernel)
     val hit = m.get(k)

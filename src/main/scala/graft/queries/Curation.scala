@@ -166,11 +166,9 @@ object Curation {
     }
     // |S| for the grid-arm switch: a consumer reads it off the bounded
     // checkpointed n frame (one |S|-row count, no corpus pass); builders
-    // have the id map anyway. Plan extraction (KernelMemo.bypassed)
-    // keeps the driver srcList path — a count() there would eagerly
-    // execute the raw pipeline during plan-shape gates.
+    // have the id map anyway.
     val nS: Long = memo match {
-      case Some(false) if !graft.io.KernelMemo.isBypassed => n.count()
+      case Some(false) => n.count()
       case _ => srcList.length.toLong
     }
     val pairs =

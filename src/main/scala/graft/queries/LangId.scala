@@ -351,14 +351,9 @@ object LangId {
          |JOIN wl1 w ON w.round = t.round AND w.ci = t.ci
          |JOIN cls c ON c.ci = t.ci""".stripMargin) { (s, dir) =>
       import s.implicits._
-      if (graft.io.KernelMemo.isBypassed) {
-        Seq.empty[(Int, String, Long, Long, Long)]
-          .toDF("round", "lang", "train_err", "held_err", "w_l1")
-      } else {
-        val (wArr, telemetry) = trainLangId(s, dir)
-        modelMap(s).put(dir, wArr)
-        telemetry.toDF("round", "lang", "train_err", "held_err", "w_l1")
-      }
+      val (wArr, telemetry) = trainLangId(s, dir)
+      modelMap(s).put(dir, wArr)
+      telemetry.toDF("round", "lang", "train_err", "held_err", "w_l1")
     },
 
     Q(
@@ -397,9 +392,7 @@ object LangId {
   private def scoredFrame(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val cls = langsOf(s, dir)
-    val wArr =
-      if (graft.io.KernelMemo.isBypassed) initWeights(cls.size)
-      else trainedModel(s, dir)
+    val wArr = trainedModel(s, dir)
     // the k×1025 model rides as a reference object — rendered as SQL
     // literals it would be the giant-literal parse hazard (r16 rule)
     val scoreCol = ColumnBridge.column(graft.functions.LangIdScore(

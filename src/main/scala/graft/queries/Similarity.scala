@@ -456,14 +456,6 @@ object Similarity {
       s: org.apache.spark.sql.SparkSession, dir: String): PqModel =
     pqCbModelMap(s).getOrElseUpdate(dir, trainPqCb(s, dir))
 
-  /** Trained codebook as a LocalRelation frame. */
-  private def pqTrainedCb(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    pqModel(s, dir).cb.toDF("m", "k", "cb")
-  }
-
   /** ADC top-3 under a given (codebook, codes) pair — the q_ann_pq
     * body, factored so PqTrainSpec can run the IDENTICAL pipeline with
     * the untrained seed codebook and compare recall at equal code
@@ -554,13 +546,12 @@ object Similarity {
     * builder, q_pq_distortion reuses the THIN (vec_id, m, code) frame
     * instead of re-encoding the corpus — exactly the "train the
     * codebook on a sample, encode once, consume many times" shape an
-    * IVF-PQ index build has at scale. Under plan-extraction bypass the
-    * untrained seed codebook stands in (same schema and plan shape, no
-    * training jobs). */
+    * IVF-PQ index build has at scale. */
   private def pqCodebookAndCodes(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       rebuildMemo: Boolean): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import s.implicits._
     val e = Tables(s, dir, "embeddings")
     // the model cache is getOrElseUpdate even for the builder: the
     // trained codebook is a PURE function of (corpus, constants) —
@@ -570,25 +561,12 @@ object Similarity {
     // overhead) amortizes the way a real IVF-PQ index build does
     // (train once, encode per build). The ENCODE memo still rebuilds
     // in the builder — that cost stays honest per run.
-    // under plan-extraction bypass: the seed-codebook FRAME stands in
-    // for the LUT side (same schema/plan shape, no training jobs), and
-    // the encode expression carries a fixed all-zeros codebook of the
-    // same geometry — plan shape is independent of the literal values,
-    // and building it runs no jobs at all
-    val (cbFrame, cbRows) =
-      if (graft.io.KernelMemo.isBypassed)
-        (pqSeedCb(s, dir),
-          for (m <- 0 until PQ_M; k <- 0 until pqK(s, dir))
-            yield (m, k, Seq.fill(PQ_DS)(0.0f)))
-      else {
-        val model = pqModel(s, dir)
-        (pqTrainedCb(s, dir), model.cb)
-      }
+    val cbRows = pqModel(s, dir).cb
     def build = pqEncode(e, cbRows)
     val codes =
       if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "pq_codes")(build)
       else graft.io.KernelMemo.reuse(s, dir, "pq_codes")(build)
-    (cbFrame, codes)
+    (cbRows.toDF("m", "k", "cb"), codes)
   }
 
   private def qHash = h("concat('q#', cast(vec_id as string))")
@@ -748,25 +726,6 @@ object Similarity {
   private def localizedModel(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
-    // bypass-aware (ADVICE r12): localizedModel collects at
-    // DataFrame-CONSTRUCTION time, so plan extraction under
-    // KernelMemo.bypassed would otherwise launch real jobs for every
-    // IVF/k-means query. Under bypass, return a ONE-ROW stand-in with
-    // the same schema built over range(1): execution-free, bounded by
-    // a GlobalLimit (which the bounded-broadcast gate accepts, like
-    // the fixed-k samples), and — unlike a LocalRelation of literals —
-    // immune to ConvertToLocalRelation/PruneFilters folding the plan
-    // away at optimization time (a lazy passthrough would instead
-    // re-open the 3^rounds Lloyd plan growth)
-    if (graft.io.KernelMemo.isBypassed) {
-      val cols = df.schema.fields.map { f =>
-        (f.dataType match {
-          case org.apache.spark.sql.types.ArrayType(et, _) => array(col("id").cast(et))
-          case dt => col("id").cast(dt)
-        }).as(f.name)
-      }
-      return s.range(1).select(cols.toIndexedSeq: _*).limit(1)
-    }
     s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
   }
 
@@ -862,9 +821,8 @@ object Similarity {
     * [[topCellsRanked]] (BestCells). The OPTIMIZED root must be the
     * LocalRelation: localizedModel frames are one directly, and
     * ConvertToLocalRelation folds the rename Project that
-    * `.toDF(idName, "c_emb")` wraps around one (adcCents); the bypass
-    * stand-in (range-based by design) and any pipeline frame stay
-    * non-local and fall through. */
+    * `.toDF(idName, "c_emb")` wraps around one (adcCents); any
+    * pipeline frame stays non-local and falls through. */
   private def localCentModel(
       cents: org.apache.spark.sql.DataFrame,
       idName: String): Option[(Seq[Long], Seq[Seq[Float]])] =
@@ -896,10 +854,10 @@ object Similarity {
     * + posexplode — r21, VERDICT r20 #1): the windowed formulation
     * below shuffles the |V|·|C| score stream through the TopK-threshold
     * aggregate, joins the threshold back, joins survivors back twice
-    * and runs the rank window. Past [[PRUNE_SWITCH_C]] (or under the
-    * KernelMemo bypass stand-in, so plan gates keep seeing the full
-    * SQL pipeline) the windowed TopK-prefilter formulation is
-    * unchanged. Output: (vec_id, embedding, c_id, crn). */
+    * and runs the rank window. Past [[PRUNE_SWITCH_C]], or for a
+    * centroid frame that is not a LocalRelation, the windowed
+    * TopK-prefilter formulation runs instead. Output: (vec_id,
+    * embedding, c_id, crn). */
   private[graft] def topCellsRanked(
       s: org.apache.spark.sql.SparkSession, dir: String,
       e: org.apache.spark.sql.DataFrame,
@@ -980,10 +938,8 @@ object Similarity {
     // shuffles the full (vector, cell, dd) stream through the vec_id
     // window exchange and joins the survivors back twice. The model
     // rides as reference objects off the LocalRelation the callers
-    // already pass (localizedModel); any other centroid frame — or the
-    // plan-extraction stand-in under KernelMemo.bypassed, so the plan
-    // gates keep seeing the full SQL pipeline — falls through to the
-    // window formulation.
+    // already pass (localizedModel); any other centroid frame falls
+    // through to the window formulation.
     val localModel: Option[(Seq[Long], Seq[Seq[Float]])] =
       if (ncIvf(s, dir) > PRUNE_SWITCH_C) None
       else localCentModel(cents, "cell")
@@ -1132,15 +1088,12 @@ object Similarity {
     cents.collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
   }
 
-  /** Trained coarse centroids as a (cell, c_emb) LocalRelation. Under
-    * plan-extraction bypass the SEED frame stands in (same schema and
-    * plan shape via the localizedModel stand-in, no training jobs). */
+  /** Trained coarse centroids as a (cell, c_emb) LocalRelation. */
   private[graft] def adcCents(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    if (graft.io.KernelMemo.isBypassed) localizedModel(adcSeedFrame(s, dir))
-    else adcCentMap(s).getOrElseUpdate(dir, trainAdcCents(s, dir))
+    adcCentMap(s).getOrElseUpdate(dir, trainAdcCents(s, dir))
       .toDF("cell", "c_emb")
   }
 
@@ -1166,20 +1119,12 @@ object Similarity {
       res: org.apache.spark.sql.DataFrame,
       rebuildMemo: Boolean): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import s.implicits._
-    val (cbFrame, cbRows) =
-      if (graft.io.KernelMemo.isBypassed)
-        (pqSeedCbOn(res, s, dir),
-          for (m <- 0 until PQ_M; k <- 0 until pqK(s, dir))
-            yield (m, k, Seq.fill(PQ_DS)(0.0f)))
-      else {
-        val model = pqCbModelMap(s).getOrElseUpdate(dir + "#adc", trainPqCbOn(s, dir, res))
-        (model.cb.toDF("m", "k", "cb"), model.cb)
-      }
+    val cbRows = pqCbModelMap(s).getOrElseUpdate(dir + "#adc", trainPqCbOn(s, dir, res)).cb
     def build = pqEncode(res, cbRows)
     val codes =
       if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "pq_adc_codes")(build)
       else graft.io.KernelMemo.reuse(s, dir, "pq_adc_codes")(build)
-    (cbFrame, codes)
+    (cbRows.toDF("m", "k", "cb"), codes)
   }
 
   /** The full trained IVFADC model for the streaming ingest tier:
@@ -2273,11 +2218,7 @@ object Similarity {
            |$rows""".stripMargin
       }) { (s, dir) =>
       import s.implicits._
-      if (graft.io.KernelMemo.isBypassed)
-        // the trajectory is driver-collected telemetry with no plan to
-        // gate (the q_classifier_train rule)
-        Seq.empty[(Int, Double, Option[Long])].toDF("round", "sample_d2", "moved")
-      else pqModel(s, dir).telemetry.toDF("round", "sample_d2", "moved")
+      pqModel(s, dir).telemetry.toDF("round", "sample_d2", "moved")
     },
 
     // ---- PQ encode stream (the codes frame itself, hash-gated) -------------
@@ -2635,15 +2576,6 @@ object Similarity {
       // assignment pipelines into one plan, recompute each round's
       // assignment once per downstream consumer, and fire the
       // unpersists before anything materialized.
-      // plan-extraction bypass: the training loop is eager by design
-      // (one telemetry row collected per round) — under
-      // KernelMemo.bypassed there is nothing to gate in this
-      // driver-collected output, and running 3 Lloyd rounds per plan
-      // sweep would turn plan extraction into a training run
-      if (graft.io.KernelMemo.isBypassed) {
-        import s.implicits._
-        Seq.empty[(Int, Long, Long)].toDF("round", "moved", "n_cells")
-      } else {
       var a = assign(seeds).persistScoped()
       val telemetry = (1 to 3).map { r =>
         // localizedModel per round: the trained centroids are the
@@ -2671,7 +2603,6 @@ object Similarity {
       a.unpersist()
       import s.implicits._
       telemetry.toDF("round", "moved", "n_cells")
-      }
     })
 
   /** The approximate methods the recall harness evaluates (all return

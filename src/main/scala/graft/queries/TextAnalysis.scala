@@ -600,10 +600,7 @@ object TextAnalysis {
          |       THEN 2 * prec * rec / (prec + rec) END AS f1
          |FROM pr""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val wArr =
-        if (graft.io.KernelMemo.isBypassed) clsFixedWeights // plan-only stand-in
-        else trainedWeights(s, dir)
-      val wDf = wArr.zipWithIndex.map { case (wt, b) => (b.toLong, wt) }
+      val wDf = trainedWeights(s, dir).zipWithIndex.map { case (wt, b) => (b.toLong, wt) }
         .toSeq.toDF("b", "wt")
       val sc = clsFeat(s, dir)
         .filter(col("held")) // pushed below the join: only the held slice scores
@@ -643,16 +640,9 @@ object TextAnalysis {
          |${(0 to ClsR).map(teleSql).mkString("\nUNION ALL\n")}""".stripMargin
     Q("q_classifier_train", oracle) { (s, dir) =>
       import s.implicits._
-      if (graft.io.KernelMemo.isBypassed) {
-        // plan-extraction bypass (the q_kmeans_train rule): the loop is
-        // eager by design; the registered output is driver-collected
-        // telemetry with no plan to gate
-        Seq.empty[(Int, Long, Long, Long)].toDF("round", "train_err", "held_err", "w_l1")
-      } else {
-        val (wArr, telemetry) = trainClassifier(s, dir)
-        clsModelMap(s).put(dir, wArr)
-        telemetry.toDF("round", "train_err", "held_err", "w_l1")
-      }
+      val (wArr, telemetry) = trainClassifier(s, dir)
+      clsModelMap(s).put(dir, wArr)
+      telemetry.toDF("round", "train_err", "held_err", "w_l1")
     }
   }
 
@@ -671,10 +661,7 @@ object TextAnalysis {
        |FROM feat f JOIN w$ClsR w USING (b)
        |GROUP BY f.doc_id""".stripMargin) { (s, dir) =>
     import s.implicits._
-    val wArr =
-      if (graft.io.KernelMemo.isBypassed) clsFixedWeights // same plan shape, no training jobs
-      else trainedWeights(s, dir)
-    val wDf = wArr.zipWithIndex.map { case (wt, b) => (b.toLong, wt) }
+    val wDf = trainedWeights(s, dir).zipWithIndex.map { case (wt, b) => (b.toLong, wt) }
       .toSeq.toDF("b", "wt")
     clsFeat(s, dir).join(broadcast(wDf), "b")
       .groupBy(col("doc_id"))

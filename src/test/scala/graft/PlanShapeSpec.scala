@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /** Plan-shape regressions: the physical plans the engine is designed to
   * produce must stay that way — filters reaching the parquet scan,
   * pruned read schemas, broadcast dims, no cartesian products, bounded
@@ -7,12 +11,66 @@ package graft
   * a shuffle or un-pushes a filter fails here, not in a 100 TB run. */
 class PlanShapeSpec extends SparkSpec {
 
-  // plans are extracted under KernelMemo.bypassed: the memoized kernel
-  // queries must be gated on their REAL pipeline plans, not the
-  // checkpoint-backed scan the memo returns (and an eager checkpoint
-  // per inspected query would turn plan extraction into execution)
-  private def planOf(q: String): String = graft.io.KernelMemo.bypassed {
-    SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan.toString
+  /** What building a frame ran, seen through a QueryExecutionListener:
+    * every job that completed during `build` — construction-time
+    * collects and counts (model training), and each memo kernel's eager
+    * `checkpoint` — as (action, QueryExecution) in completion order,
+    * plus the frame itself. The memo is emptied first, so a memo-backed
+    * query builds (and checkpoints) every kernel it reads. */
+  private final case class Built(jobs: Seq[(String, QueryExecution)], df: DataFrame) {
+    /** The memo checkpoint jobs, inner kernels first: a builder's own
+      * kernel is the LAST, because `rebuild` evaluates the build (and
+      * any kernel it reuses) before checkpointing it. */
+    def kernels: Seq[QueryExecution] = jobs.collect { case ("checkpoint", qe) => qe }
+    /** The frame's own physical plan (not executed). */
+    def plan: String = df.queryExecution.executedPlan.toString
+    /** Every QueryExecution the query ran or returned. */
+    def all: Seq[QueryExecution] = jobs.map(_._2) :+ df.queryExecution
+  }
+
+  private def built(build: => DataFrame): Built = {
+    import org.apache.spark.graft.ListenerBus
+    graft.io.KernelMemo.invalidate(spark)
+    ListenerBus.drain(spark.sparkContext) // earlier jobs report elsewhere
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.add((f, qe))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = try {
+      val d = build
+      ListenerBus.drain(spark.sparkContext)
+      d
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    Built(ran.asScala.toSeq, df)
+  }
+
+  private def builtQuery(q: String): Built = built(SparkEntry.queries(q)(spark, sf()))
+
+  /** The plan a job ran: AQE's final plan once the job has executed. */
+  private def finalPlan(qe: QueryExecution): String = qe.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+    case p => p.toString
+  }
+
+  /** Query `q`'s whole pipeline: the AQE-final plan of every memo kernel
+    * its construction checkpointed, then the frame's own plan — which
+    * for a memo-free query is all there is. */
+  private def planOf(q: String): String = {
+    val b = builtQuery(q)
+    (b.kernels.map(finalPlan) :+ b.plan).mkString("\n")
+  }
+
+  /** A memo builder's own kernel: the AQE-final plan of the last
+    * checkpoint job `q` ran (its frame only scans that checkpoint). */
+  private def kernelOf(q: String): String = finalPlan(kernelJob(q))
+
+  private def kernelJob(q: String): QueryExecution = {
+    val ks = builtQuery(q).kernels
+    assert(ks.nonEmpty, s"$q checkpointed no memo kernel")
+    ks.last
   }
 
   test("q_filter_pushdown: all predicates reach the parquet scan; schema pruned") {
@@ -68,10 +126,8 @@ class PlanShapeSpec extends SparkSpec {
     // to 0 must flip the gate to the bloom-prefilter + exact-confirm
     // shape — the map-only miss arm unions the candidate confirm join,
     // and no broadcast HINT survives (AQE sizes the confirm join)
-    val p = graft.io.KernelMemo.bypassed {
-      graft.queries.Url.urlGate(spark, sf(), rowBudget = 0L)
-        .queryExecution.executedPlan.toString
-    }
+    val p = graft.queries.Url.urlGate(spark, sf(), rowBudget = 0L)
+      .queryExecution.executedPlan.toString
     assert(p.contains("bloom_hits"), s"expected the bloom prefilter:\n$p")
     assert(p.contains("Union"), s"expected the miss/candidate union arms:\n$p")
     assert(!p.contains("SortMergeJoin"),
@@ -105,18 +161,22 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("no query plan contains a cartesian product or nested-loop join") {
+    // every job a query runs — training collects and memo checkpoints
+    // included — plus the frame it returns
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      val p = planOf(name)
-      assert(!p.contains("CartesianProduct"), s"$name has a cartesian product")
+      val b = builtQuery(name)
+      graft.io.CacheScope.releaseAll()
+      for (qe <- b.all)
+        assert(!finalPlan(qe).contains("CartesianProduct"), s"$name has a cartesian product")
     }
   }
 
   test("memo consumers read the checkpointed kernel, never the corpus (diagnostic-tier rule)") {
     // SURVEY §8.4 round-13 rule: a diagnostic/composition query names
     // its builder kernel and adds ZERO new corpus scans. Gate: after
-    // the designated builders run, the consumer's plan — extracted
-    // WITHOUT KernelMemo.bypassed, i.e. what actually executes — must
-    // scan the memoized checkpoint (a LogicalRDD) and must contain no
+    // the designated builders run, the consumer's plan — built against
+    // the filled memo, unlike planOf, which empties it — must scan the
+    // memoized checkpoint (a LogicalRDD) and must contain no
     // documents/embeddings parquet relation.
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -139,14 +199,19 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dedup signature stages are map-side: no shuffle before partial aggregation") {
-    val p = planOf("q_dedup_simhash")
-    // the explode -> hash -> partial agg must appear below the first
-    // exchange (map-side combine on doc_id); the signature is ONE
+    // q_dedup_simhash builds the simhash pair kernel: gate the
+    // checkpoint job that computed it
+    val p = kernelOf("q_dedup_simhash")
+    // the explode -> hash -> partial agg must run map-side: between the
+    // partial aggregate and the corpus scan below it (a tree prints
+    // parents first) there is no exchange; the signature is ONE
     // imperative aggregate (ObjectHashAggregate), not 60 builtin sums
-    val firstExchange = p.indexOf("Exchange hashpartitioning")
-    val firstAgg = p.indexOf("ObjectHashAggregate")
-    assert(firstAgg >= 0 && firstExchange >= 0)
-    assert(p.contains("simhash_agg"))
+    val pi = p.indexOf("partial_simhash_agg")
+    val scan = p.indexOf("FileScan parquet", pi)
+    assert(pi >= 0 && scan > pi, s"partial signature aggregate over the scan missing:\n$p")
+    assert(!p.substring(pi, scan).contains("Exchange"),
+      s"a shuffle runs before the partial signature aggregate:\n$p")
+    assert(p.contains("ObjectHashAggregate"), p)
   }
 
   test("q_tpch_q5: dims broadcast; only the two fact joins shuffle") {
@@ -163,21 +228,76 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_ann_topk: threshold via bounded-heap aggregate, no full sort of the score stream") {
-    val p = planOf("q_ann_topk")
+    val p = kernelOf("q_ann_topk")
     assert(p.contains("ObjectHashAggregate"), "TopK threshold aggregate missing")
     // threshold agg + unhinted threshold/survivor joins (AQE collapses
-    // the small sides at runtime) + final per-query rank — bounded even
-    // in the pre-AQE plan
+    // the small sides at runtime) + final per-query rank
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 6, p)
   }
 
   test("q_ann_ivf: window argmax assignment — no broadcast of a per-vector frame") {
-    val p = planOf("q_ann_ivf")
-    assert(p.contains("BroadcastHashJoin")) // the centroid dims broadcast
-    assert(p.contains("Window"), "per-vector argmax must be a window, not groupBy+join-back")
-    // score-stream window + assignment join + probe join + ranks — never
-    // an extra exchange for a groupBy-max rejoin
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, ResolvedHint}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.col
+    val argmaxWindow = "Window \\[max\\(".r
+    val groupByMax = "functions=\\[(partial_)?max\\(".r
+    // the kernel that runs: at the flat arm (|C| <= PRUNE_SWITCH_C, every
+    // gate corpus) the localized centroid model makes the argmax the
+    // native BestCell map — no per-vector window, no groupBy-max join-back
+    val qe = kernelJob("q_ann_ivf")
+    val p = finalPlan(qe)
+    assert(p.contains("best_cell("), s"assignment must be the native BestCell map:\n$p")
+    assert(argmaxWindow.findFirstIn(p).isEmpty && groupByMax.findFirstIn(p).isEmpty,
+      s"the BestCell arm must not window or groupBy-max the score stream:\n$p")
+    // every broadcast is the fixed-|Q| probe sample (or a local model),
+    // never the per-vector assignment
+    object Aqe extends adaptive.AdaptiveSparkPlanHelper
+    def strip(n: SparkPlan): SparkPlan = n match {
+      case w: WholeStageCodegenExec => strip(w.child)
+      case i: InputAdapter => strip(i.child)
+      case f: FilterExec => strip(f.child)
+      case pr: ProjectExec => strip(pr.child)
+      case other => other
+    }
+    val bcasts = Aqe.collect(qe.executedPlan) { case b: BroadcastExchangeExec => b }
+    assert(bcasts.nonEmpty, s"expected the probe-sample broadcast:\n$p")
+    for (b <- bcasts) assert(strip(b.child) match {
+      case _: TakeOrderedAndProjectExec | _: GlobalLimitExec | _: CollectLimitExec |
+          _: LocalTableScanExec => true
+      case _ => false
+    }, s"broadcast of a frame that grows with the corpus:\n$b")
+    // probe join + rank window only
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 6, p)
+    // the windowed formulations, which run past PRUNE_SWITCH_C or for a
+    // centroid frame that is not a LocalRelation: the argmax is a
+    // window over the score stream, never a groupBy-max join-back, and
+    // only the bounded centroid frame is hinted
+    val cents = graft.io.Tables(spark, sf(), "embeddings")
+      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
+      .orderBy(col("vec_id")).limit(16)
+    val assign = graft.queries.Similarity.kmAssign(spark, sf(), cents).queryExecution
+    val w = assign.executedPlan.toString
+    assert(argmaxWindow.findFirstIn(w).isDefined,
+      s"per-vector argmax must be a window, not groupBy+join-back:\n$w")
+    assert(groupByMax.findFirstIn(w).isEmpty && !w.contains("best_cell("), w)
+    assert(w.contains("BroadcastHashJoin"), s"the centroid dims broadcast:\n$w")
+    // score-stream window + assignment join + ranks — never an extra
+    // exchange for a groupBy-max rejoin
+    assert("Exchange hashpartitioning".r.findAllIn(w).size <= 6, w)
+    val ranked = graft.queries.Similarity.topCellsRanked(spark, sf(),
+      graft.io.Tables(spark, sf(), "embeddings"),
+      cents.select(col("cell").as("c_id"), col("c_emb")), 2).queryExecution
+    val r = ranked.executedPlan.toString
+    assert(r.contains("ObjectHashAggregate") && r.contains("Window") && !r.contains("best_cells("),
+      s"the multiprobe ranking must be the TopK-threshold + rank-window pipeline:\n$r")
+    for (qe <- Seq(assign, ranked)) {
+      val hinted = qe.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.isDefined => h.child
+      }
+      assert(hinted.nonEmpty && hinted.forall(_.collectFirst { case l: GlobalLimit => l }.nonEmpty),
+        s"only the bounded centroid frame may be hinted:\n${qe.analyzed}")
+    }
   }
 
   test("ANN/pipeline: no forced broadcast of a frame that grows with the corpus") {
@@ -214,12 +334,18 @@ class PlanShapeSpec extends SparkSpec {
       "q_tpch_q2", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q11",
       "q_tpch_q15", "q_tpch_q17", "q_tpch_q22")
     for (name <- gated) {
-      val plan = graft.io.KernelMemo.bypassed {
-        SparkEntry.queries(name)(spark, sf()).queryExecution.analyzed
-      }
-      val hinted = plan.collect { case h: ResolvedHint if h.hints.strategy.isDefined => h.child }
+      // every job the query runs — its memo kernels and training collects
+      // carry the hints, the frame of a memo builder only scans a checkpoint
+      val hinted = builtQuery(name).all.flatMap(_.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.isDefined => h.child
+      })
+      graft.io.CacheScope.releaseAll()
       // non-vacuity: the ANN queries DO hint their sample/centroid frames
-      if (name != "q_pipeline_filter" && name != "q_dedup_ngram_capped")
+      // (the flat-arm IVF/k-means queries carry their centroids inside the
+      // native BestCell/BestCells expression and hint nothing; the
+      // windowed arm's centroid hint is gated in the q_ann_ivf test)
+      if (!Set("q_pipeline_filter", "q_dedup_ngram_capped",
+          "q_ann_ivf", "q_ann_kmeans", "q_ann_ivf_multiprobe").contains(name))
         assert(hinted.nonEmpty, s"$name: expected the sample/centroid broadcast hints")
       for (sub <- hinted) {
         // a LocalRelation is a driver-materialized bounded model frame
@@ -299,7 +425,7 @@ class PlanShapeSpec extends SparkSpec {
     // probe equi-join is gated on the FORCED coverage query, which runs
     // the two-level rule unconditionally (q_kmeans_train's registered
     // output is driver-collected telemetry — no plan to gate there)
-    val p = planOf("q_ivf_pruned_assign")
+    val p = kernelOf("q_ivf_pruned_assign")
     assert("BroadcastHashJoin \\[vpcell".r.findFirstIn(p).isDefined ||
            "BroadcastHashJoin \\[cast\\(vpcell".r.findFirstIn(p).isDefined,
       s"q_ivf_pruned_assign: pruned probe equi-join missing:\n$p")
@@ -308,7 +434,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_dedup_ngram_capped: Tungsten df count — no window sort, list aggs only on per-doc keys") {
-    val p = planOf("q_dedup_ngram_capped")
+    val p = kernelOf("q_dedup_ngram_capped")
     // the cap's df must be a plain count HashAggregate (fixed-width
     // buffers, graceful spill), never a window count — a window
     // sort-shuffles the full postings stream and still needs a self-join
@@ -324,18 +450,20 @@ class PlanShapeSpec extends SparkSpec {
     // buffers do that silently — the df count, the pair aggregate and
     // the hot-set collection must all stay hash-based)
     assert(!p.contains("SortAggregate"), s"a SortAggregate crept into the capped plan:\n$p")
-    // pre-AQE count; the duplicated docHot/self-join subtrees (two
-    // pair-attach joins + the r11 cap-escape branch, which reuses the
-    // docHot aggregate and adds the min-hot self-join and the final
-    // pair-dedup groupBy) collapse to ReusedExchange at runtime — the
-    // companion test below pins that reuse
+    // AQE-final count, ReusedExchange lines included; the duplicated
+    // docHot/self-join subtrees (two pair-attach joins + the r11
+    // cap-escape branch, which reuses the docHot aggregate and adds the
+    // min-hot self-join and the final pair-dedup groupBy) collapse to
+    // ReusedExchange at runtime — the companion test below pins that
+    // reuse
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 12, p)
   }
 
   test("q_dedup_ngram_capped: postings exchange is REUSED at runtime, not recomputed") {
     // the plan comment in Dedup.scala promises the kept/hot vocab
     // branches descend from ONE materialized df aggregate — gate it on
-    // the EXECUTED adaptive plan, so a Spark upgrade that silently
+    // the final adaptive plan of the kernel's checkpoint job (the query
+    // is the kernel's builder), so a Spark upgrade that silently
     // doubles the postings shuffle fails here instead of only showing
     // up as a bench regression. Start from a clean cache: a live cache
     // of the UNCAPPED kernel's shingle frame (same subtree) would be
@@ -344,11 +472,7 @@ class PlanShapeSpec extends SparkSpec {
     // reason.
     graft.io.CacheScope.releaseAll()
     spark.catalog.clearCache()
-    val df = graft.io.KernelMemo.bypassed {
-      SparkEntry.queries("q_dedup_ngram_capped")(spark, sf())
-    }
-    df.collect() // drives AQE to its final plan on df's own QueryExecution
-    val p = df.queryExecution.executedPlan.toString
+    val p = kernelOf("q_dedup_ngram_capped")
     assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage"),
       s"no runtime exchange reuse in the capped dedup plan:\n$p")
   }
@@ -368,7 +492,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_ann_pq: bounded codebook/LUT broadcast; Tungsten ADC aggregate") {
-    val p = planOf("q_ann_pq")
+    // the ADC ranking kernel q_ann_pq builds (the encode kernel it reads
+    // is q_pq_encode's gate)
+    val p = kernelOf("q_ann_pq")
     // the codebook and per-query LUT must reach the corpus via
     // broadcast (they are bounded M*K / |Q|*M*K frames); the ADC sum
     // is a plain decimal HashAggregate
@@ -449,9 +575,7 @@ class PlanShapeSpec extends SparkSpec {
   test("q_tpch_q17: part-slice semi join sits below the per-part avg aggregate") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    val qe = graft.io.KernelMemo.bypassed {
-      SparkEntry.queries("q_tpch_q17")(spark, sf()).queryExecution
-    }
+    val qe = SparkEntry.queries("q_tpch_q17")(spark, sf()).queryExecution
     // the correlated-avg aggregate must consume the SEMI-JOIN-pruned
     // lineitem stream (the q_tpch_q2 move) — a grouped aggregate over
     // the full fact here shuffles every (partkey) group for a
@@ -507,9 +631,7 @@ class PlanShapeSpec extends SparkSpec {
     // the eval-row budget; forcing the budget to 0 must produce the
     // bloom-prefiltered scale branch with no forced broadcast anywhere
     // (AQE may still size-derive one at runtime — that is the point).
-    val df = graft.io.KernelMemo.bypassed {
-      graft.queries.TextAnalysis.decontaminateGate(spark, sf(), evalRowBudget = 0L)
-    }
+    val df = graft.queries.TextAnalysis.decontaminateGate(spark, sf(), evalRowBudget = 0L)
     val analyzed = df.queryExecution.analyzed.toString
     assert(!analyzed.contains("ResolvedHint") && !analyzed.contains("UnresolvedHint"),
       s"scale branch must carry no broadcast hint:\n$analyzed")
@@ -553,9 +675,7 @@ class PlanShapeSpec extends SparkSpec {
     // AQE decides the vocab join strategy from observed sizes.
     import org.apache.spark.sql.catalyst.plans.logical._
     for (name <- Seq("q_tfidf", "q_bm25")) {
-      val plan = graft.io.KernelMemo.bypassed {
-        SparkEntry.queries(name)(spark, sf()).queryExecution.analyzed
-      }
+      val plan = SparkEntry.queries(name)(spark, sf()).queryExecution.analyzed
       val hinted = plan.collect { case h: ResolvedHint if h.hints.strategy.isDefined => h.child }
       for (sub <- hinted) {
         val scalarAgg = sub.collectFirst {
@@ -575,7 +695,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_pq_encode: native per-row encode is a map-only plan, zero exchanges") {
-    val p = planOf("q_pq_encode")
+    val p = kernelOf("q_pq_encode")
     // the quantizer is a pure function of the row — the r14 relational
     // kernel paid a broadcast crossJoin + M·K-row aggregate per vector;
     // any exchange here means the native pq_codes loop regressed
@@ -607,9 +727,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q_adaptive_quality: cutoff cumsum windows the bounded distinct-score frame, not the corpus") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-    val qe = graft.io.KernelMemo.bypassed {
-      SparkEntry.queries("q_adaptive_quality")(spark, sf()).queryExecution
-    }
+    val qe = SparkEntry.queries("q_adaptive_quality")(spark, sf()).queryExecution
     val wins = qe.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty, "expected the cutoff cumsum window")
     // a Window whose child has no Aggregate beneath would be the scale
@@ -739,9 +857,7 @@ class PlanShapeSpec extends SparkSpec {
     // same keys: runtime AQE must serve one from the other's shuffle
     graft.io.CacheScope.releaseAll()
     spark.catalog.clearCache()
-    val df = graft.io.KernelMemo.bypassed {
-      SparkEntry.queries("q_dedup_simhash_blocks")(spark, sf())
-    }
+    val df = SparkEntry.queries("q_dedup_simhash_blocks")(spark, sf())
     df.collect()
     val pr = df.queryExecution.executedPlan.toString
     assert(pr.contains("ReusedExchange") || pr.contains("ReusedQueryStage"),
@@ -891,7 +1007,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_dsir_weights: bounded model broadcast back; one feature explode each pass") {
-    val p = planOf("q_dsir_weights")
+    val p = kernelOf("q_dsir_weights")
     assert(p.contains("BroadcastHashJoin"),
       "the ≤1024-row model must join back broadcast, never shuffle the corpus")
     assert(!p.contains("CartesianProduct"))
@@ -913,9 +1029,7 @@ class PlanShapeSpec extends SparkSpec {
     // could never match Spark's real windowspecdefinition text and
     // would also pass on '[lang' anywhere in the plan (ADVICE r17)
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val plan = graft.io.KernelMemo.bypassed {
-      SparkEntry.queries("q_ccnet_buckets")(spark, sf()).queryExecution.optimizedPlan
-    }
+    val plan = SparkEntry.queries("q_ccnet_buckets")(spark, sf()).queryExecution.optimizedPlan
     val ntileWindows = plan.collect {
       case w: LWindow if w.windowExpressions.exists(_.sql.contains("ntile(3)")) => w
     }

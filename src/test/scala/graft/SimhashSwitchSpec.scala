@@ -44,9 +44,7 @@ class SimhashSwitchSpec extends SparkSpec {
     for (d <- Seq("sf0.001", "sf0.01"))
       assert(graft.io.Tables.rowCount(spark, sf(d), "documents") <= Dedup.SimhashBandsMaxN)
     val dir = sf()
-    val switched = pairSet(graft.io.KernelMemo.bypassed {
-      Dedup.simhashPairs(spark, dir, rebuildMemo = false)
-    })
+    val switched = pairSet(Dedup.simhashPairs(spark, dir, rebuildMemo = false))
     val bands = pairSet(Dedup.simhashPairsBands(spark, dir))
     graft.io.CacheScope.releaseAll()
     assert(switched == bands)
