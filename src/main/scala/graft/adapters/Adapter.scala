@@ -4,6 +4,45 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** How a param's raw config value reads: `read` gives the typed value, or
+  * None for a shape the kind does not accept. `name` is its docs type. */
+sealed abstract class ParamKind(val name: String, val expected: String)(
+    val read: Any => Option[Any])
+
+object ParamKind {
+  /** Any JSON scalar, read as text. */
+  case object Str extends ParamKind("string", "a string, number or boolean")({
+    case null | _: Iterable[_] => None
+    case v => Some(String.valueOf(v))
+  })
+  /** A boolean, or a `true`/`false` string. */
+  case object Bool extends ParamKind("boolean", "true or false")({
+    case b: Boolean => Some(b)
+    case s: String => s.trim.toBooleanOption
+    case _ => None
+  })
+  /** An int, or a numeric string. */
+  case object Int extends ParamKind("integer", "an integer")({
+    case n: scala.Int => Some(n)
+    case n: Long if n.isValidInt => Some(n.toInt)
+    case s: String => s.trim.toIntOption
+    case _ => None
+  })
+  /** An array of scalars, or a non-empty comma-separated string. */
+  case object StrList
+      extends ParamKind("string list", "an array or a non-empty comma-separated string")({
+    case s: Seq[_] => Option.when(s.forall(Str.read(_).isDefined))(s.map(String.valueOf))
+    case s: String if s.nonEmpty => Some(s.split(",").toSeq)
+    case _ => None
+  })
+  /** One of `values`, matched case-insensitively; reads as the declared spelling. */
+  final case class OneOf(values: String*)
+      extends ParamKind(s"one of ${values.mkString(", ")}", s"one of ${values.mkString(", ")}")({
+    case s: String => values.find(_.equalsIgnoreCase(s))
+    case _ => None
+  })
+}
+
 /** Adapter SPI — the engine's plugin surface, capability-parity with the
   * reference's `InputAdapter`/`OutputAdapter` + `DefinitionMetaBuilder`
   * contracts (reference: datacooker-jdbc/.../JdbcColumnarInput.java:27-77,
@@ -12,14 +51,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the committer.
   *
   * A declared [[ParamDef]] list doubles as the doc source (DocGen parity,
-  * reference DocGen.java:42-227) and powers validation/coercion of the
-  * loosely-typed config params.
+  * reference DocGen.java:42-227) and is the one place a param's type,
+  * default and allowed values live: [[AdapterConf]] checks and coerces the
+  * loosely-typed config params against it.
   */
 final case class ParamDef(
-    name: String,
-    descr: String,
-    default: Option[Any] = None,
-    required: Boolean = false)
+    name: String, descr: String, kind: ParamKind, default: Option[Any], required: Boolean) {
+  require(default.forall(d => kind.read(d).contains(d)),
+    s"param '$name': default ${default.get} is not ${kind.expected}")
+}
+
+object ParamDef {
+  /** A param of the kind of its default: `Bool` or `Int` by its type, else `Str`. */
+  def apply(name: String, descr: String, default: Option[Any] = None,
+      required: Boolean = false): ParamDef = ParamDef(name, descr,
+    default.collect { case _: Boolean => ParamKind.Bool; case _: Int => ParamKind.Int }
+      .getOrElse(ParamKind.Str), default, required)
+  /** A `StrList` param, with no default. */
+  def list(name: String, descr: String): ParamDef =
+    ParamDef(name, descr, ParamKind.StrList, None, required = false)
+  /** A `OneOf(values)` param whose default is the first value. */
+  def oneOf(name: String, descr: String, values: String*): ParamDef =
+    ParamDef(name, descr, ParamKind.OneOf(values: _*), values.headOption, required = false)
+}
 
 final case class AdapterMeta(
     verb: String,
@@ -27,51 +81,36 @@ final case class AdapterMeta(
     pathExamples: Seq[String],
     params: Seq[ParamDef])
 
-/** Validated view over the raw config params of one task location. */
+/** Checked view over the raw config params of one task location: building
+  * it rejects a missing required param, an unknown param, and a value its
+  * param's kind does not accept; the accessors read the value or the
+  * declared default. */
 final case class AdapterConf(meta: AdapterMeta, raw: Map[String, Any]) {
   private val defs = meta.params.map(d => d.name -> d).toMap
-  for (d <- meta.params if d.required)
-    require(raw.contains(d.name), s"${meta.verb}: required param '${d.name}' missing")
-  for (k <- raw.keys if !defs.contains(k) && k != "tmp")
-    throw new IllegalArgumentException(
-      s"${meta.verb}: unknown param '$k'; known: ${defs.keys.mkString(", ")}")
+  for (d <- meta.params if d.required && !raw.contains(d.name))
+    throw new IllegalArgumentException(s"${meta.verb}: required param '${d.name}' missing")
+  private val values: Map[String, Any] = raw.collect { case (k, v) if k != "tmp" =>
+    val d = defs.getOrElse(k, throw new IllegalArgumentException(
+      s"${meta.verb}: unknown param '$k'; known: ${defs.keys.mkString(", ")}"))
+    val shown = v match { case s: String => "\"" + s + "\""; case other => String.valueOf(other) }
+    k -> d.kind.read(v).getOrElse(throw new IllegalArgumentException(
+      s"${meta.verb} $k: expected ${d.kind.expected}, got $shown"))
+  }
 
   private def get(name: String): Option[Any] =
-    raw.get(name).orElse(defs.get(name).flatMap(_.default))
+    values.get(name).orElse(defs.get(name).flatMap(_.default))
 
-  def str(name: String): Option[String] = get(name).map(String.valueOf)
-  def str(name: String, dflt: String): String = str(name).getOrElse(dflt)
-  def int(name: String, dflt: Int): Int = get(name) match {
-    case Some(n: Int) => n
-    case Some(n: Long) if n.isValidInt => n.toInt
-    case Some(s: String) => s.trim.toIntOption.getOrElse(invalid(name, "an integer", s))
-    case None | Some(null) => dflt
-    case Some(v) => invalid(name, "an integer", v)
-  }
-  def bool(name: String, dflt: Boolean): Boolean = get(name) match {
-    case Some(b: Boolean) => b
-    case Some(s: String) => s.trim.toBooleanOption.getOrElse(invalid(name, "true or false", s))
-    case None | Some(null) => dflt
-    case Some(v) => invalid(name, "true or false", v)
-  }
-
-  private def invalid(name: String, expected: String, got: Any): Nothing = {
-    val shown = got match {
-      case s: String => "\"" + s + "\""
-      case other => String.valueOf(other)
-    }
-    throw new IllegalArgumentException(s"${meta.verb} $name: expected $expected, got $shown")
-  }
-  def strSeq(name: String): Option[Seq[String]] = get(name) match {
-    case Some(s: Seq[_]) => Some(s.map(String.valueOf))
-    case Some(s: String) if s.nonEmpty => Some(s.split(",").toSeq)
-    case _ => None
-  }
+  def str(name: String): Option[String] = get(name).map(_.asInstanceOf[String])
+  def int(name: String): Int = get(name).get.asInstanceOf[Int]
+  def bool(name: String): Boolean = get(name).get.asInstanceOf[Boolean]
+  def strSeq(name: String): Option[Seq[String]] = get(name).map(_.asInstanceOf[Seq[String]])
 }
 
-trait InputAdapter {
+trait Adapter {
   def meta: AdapterMeta
+}
 
+trait InputAdapter extends Adapter {
   /** Load one task location. One load may produce several named streams
     * (`sub_dirs` semantics, reference S3DirectInput.java:55-118): the
     * result maps stream name → DataFrame, in discovery order.
@@ -84,9 +123,7 @@ trait InputAdapter {
       conf: AdapterConf): ListMap[String, DataFrame]
 }
 
-trait OutputAdapter {
-  def meta: AdapterMeta
-
+trait OutputAdapter extends Adapter {
   /** Save one stream under `subName` (possibly empty) below `path`. */
   def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit
 }
@@ -141,8 +178,8 @@ object Adapters {
     "s3directText" -> new S3DirectOutputAdapter("s3directText", new HadoopTextOutput),
     "s3directParquet" -> new S3DirectOutputAdapter("s3directParquet", parquetOutput))
 
-  def input(verb: String): InputAdapter = inputs.getOrElse(
-    verb, throw new IllegalArgumentException(s"Input adapter '$verb' not found"))
-  def output(verb: String): OutputAdapter = outputs.getOrElse(
-    verb, throw new IllegalArgumentException(s"Output adapter '$verb' not found"))
+  def input(verb: String): InputAdapter = inputs.getOrElse(verb, throw new IllegalArgumentException(
+    s"unknown input adapter '$verb'; registered: ${inputs.keys.mkString(", ")}"))
+  def output(verb: String): OutputAdapter = outputs.getOrElse(verb, throw new IllegalArgumentException(
+    s"unknown output adapter '$verb'; registered: ${outputs.keys.mkString(", ")}"))
 }

@@ -26,22 +26,22 @@ private[adapters] object HadoopFiles {
 
   // Params the file verbs share, declared once; each verb lists the ones
   // it takes, in its own order.
-  val columnsParam: ParamDef = ParamDef("columns", "Columns to select (subset, any order)")
+  val columnsParam: ParamDef = ParamDef.list("columns", "Columns to select (subset, any order)")
   val subDirsParam: ParamDef = ParamDef(
     "sub_dirs", "Each first-level subdirectory becomes its own stream", Some(false))
   val recursiveParam: ParamDef = ParamDef(
     "recursive",
     "Recurse into nested directories (the reference's S3 prefix listing is recursive)",
     Some(false))
-  val partitioningParam: ParamDef = ParamDef(
+  val partitioningParam: ParamDef = ParamDef.oneOf(
     "partitioning",
     "Row partitioning with part_count: hashcode (co-locate equal rows) or random",
-    Some("hashcode"))
+    "hashcode", "random")
   val mergeSchemaParam: ParamDef = ParamDef(
     "merge_schema",
     "Union the schemas of all files (schema evolution; columns absent in a file read as null)",
     Some(false))
-  val writeColumnsParam: ParamDef = ParamDef("columns", "Columns to write; '_' skips a column")
+  val writeColumnsParam: ParamDef = ParamDef.list("columns", "Columns to write; '_' skips a column")
   def codecParam(default: String): ParamDef =
     ParamDef("codec", "Compression codec", Some(default))
 
@@ -68,7 +68,7 @@ private[adapters] object HadoopFiles {
       partition(conf.strSeq("columns").fold(df)(cols => df.select(cols.map(col): _*)),
         partCount, conf)
     }
-    if (conf.bool("sub_dirs", dflt = false)) {
+    if (conf.bool("sub_dirs")) {
       val subs = subDirs(spark, path)
       ListMap(subs.map(s => s"$name/$s" -> load(s"$path/$s")): _*)
     } else ListMap(name -> load(path))
@@ -81,12 +81,8 @@ private[adapters] object HadoopFiles {
     * every record by hashCode), `random` round-robins. */
   def partition(df: DataFrame, partCount: Int, conf: AdapterConf): DataFrame =
     if (partCount <= 0) df
-    else conf.str("partitioning", "hashcode") match {
-      case "random" => df.repartition(partCount)
-      case "hashcode" => df.repartition(partCount, hash(df.columns.map(col).toIndexedSeq: _*))
-      case other => throw new IllegalArgumentException(
-        s"partitioning must be 'hashcode' or 'random', got '$other'")
-    }
+    else if (conf.str("partitioning").contains("random")) df.repartition(partCount)
+    else df.repartition(partCount, hash(df.columns.map(col).toIndexedSeq: _*))
 
   /** Shared `path_filter` param: a name glob over the objects under the
     * path. This is also the supported recipe for a prefix mixing
@@ -102,17 +98,14 @@ private[adapters] object HadoopFiles {
     * `path_filter` applied (Spark's pathGlobFilter matches the file NAME,
     * like the reference's per-object suffix check). */
   def reader(spark: SparkSession, conf: AdapterConf): DataFrameReader = {
-    val r = spark.read.option("recursiveFileLookup", conf.bool("recursive", dflt = false))
+    val r = spark.read.option("recursiveFileLookup", conf.bool("recursive"))
     conf.str("path_filter").fold(r)(g => r.option("pathGlobFilter", g))
   }
 
   /** Resolve an output `columns` list against the frame: `_` entries skip
     * the column (JdbcColumnarOutput.java:100-118 semantics). */
   def selectColumns(df: DataFrame, conf: AdapterConf): DataFrame =
-    conf.strSeq("columns") match {
-      case Some(cols) => df.select(cols.filterNot(_ == "_").map(col): _*)
-      case None => df
-    }
+    conf.strSeq("columns").fold(df)(cols => df.select(cols.filterNot(_ == "_").map(col): _*))
 
   /** Shared file-output params — the knobs a 100 TB write needs:
     * hive-style `partition_by` directories (downstream partition
@@ -121,9 +114,9 @@ private[adapters] object HadoopFiles {
     * `max_records_per_file` (bounds file size irrespective of task
     * count). */
   val writeParams: Seq[ParamDef] = Seq(
-    ParamDef("partition_by", "Hive-style partition columns (dir per value)"),
-    ParamDef("sort_by", "Sort rows within each write task (encoding + min/max pruning)"),
-    ParamDef("zorder_by",
+    ParamDef.list("partition_by", "Hive-style partition columns (dir per value)"),
+    ParamDef.list("sort_by", "Sort rows within each write task (encoding + min/max pruning)"),
+    ParamDef.list("zorder_by",
       "2-8 BIGINT columns; cluster the layout on their Morton interleave " +
         "(32 bits each for two, 64/N bits each beyond) so parquet min/max " +
         "stats prune on all of them (overrides sort_by)"),
@@ -131,9 +124,9 @@ private[adapters] object HadoopFiles {
       "Explicit z-range task count for zorder_by (0 = let AQE size the ranges)",
       Some(0)),
     ParamDef("max_records_per_file", "Cap records per output file (0 = no cap)", Some(0)),
-    ParamDef("save_mode",
+    ParamDef.oneOf("save_mode",
       "What to do when the destination exists: overwrite, append, ignore, error",
-      Some("overwrite")))
+      "overwrite", "append", "ignore", "error", "errorifexists", "default"))
 
   /** Column-selected, optionally sorted writer with the shared params applied. */
   def writer(df: DataFrame, conf: AdapterConf): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
@@ -189,7 +182,7 @@ private[adapters] object HadoopFiles {
         // leaving legacy layouts byte-identical.
         val withZ = base.withColumn(
           "__z", z.bitwiseXOR(lit(Long.MinValue)))
-        val n = conf.int("zorder_partitions", 0)
+        val n = conf.int("zorder_partitions")
         val ranged =
           if (n > 0) withZ.repartitionByRange(n, col("__z"))
           else withZ.repartitionByRange(col("__z"))
@@ -197,14 +190,11 @@ private[adapters] object HadoopFiles {
       case Some(other) =>
         throw new IllegalArgumentException(
           s"zorder_by needs 2 to 8 columns, got $other")
-      case None => conf.strSeq("sort_by") match {
-        case Some(cs) => base.sortWithinPartitions(cs.map(col): _*)
-        case None => base
-      }
+      case None => conf.strSeq("sort_by").fold(base)(cs => base.sortWithinPartitions(cs.map(col): _*))
     }
-    var w = sorted.write.mode(conf.str("save_mode", "overwrite"))
+    var w = sorted.write.mode(conf.str("save_mode").get)
     conf.strSeq("partition_by").foreach(cs => w = w.partitionBy(cs: _*))
-    val cap = conf.int("max_records_per_file", 0)
+    val cap = conf.int("max_records_per_file")
     if (cap > 0) w = w.option("maxRecordsPerFile", cap.toLong)
     w
   }
@@ -225,7 +215,7 @@ final class HadoopColumnarInput extends InputAdapter {
     Seq(
       ParamDef("delimiter", "Column delimiter", Some("\t")),
       ParamDef("schema_from_file", "Read schema from the file header line", Some(true)),
-      ParamDef("schema_default", "Explicit column list; '_' skips a position"),
+      ParamDef.list("schema_default", "Explicit column list; '_' skips a position"),
       HadoopFiles.columnsParam,
       HadoopFiles.subDirsParam,
       HadoopFiles.recursiveParam,
@@ -242,9 +232,9 @@ final class HadoopColumnarInput extends InputAdapter {
       partCount: Int,
       conf: AdapterConf): ListMap[String, DataFrame] =
     HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
-      val fromHeader = conf.bool("schema_from_file", dflt = true)
+      val fromHeader = conf.bool("schema_from_file")
       val reader = HadoopFiles.reader(spark, conf)
-        .option("sep", conf.str("delimiter", "\t"))
+        .option("sep", conf.str("delimiter").get)
         .option("header", fromHeader && conf.strSeq("schema_default").isEmpty)
       // Reference semantics edge case (S3DirectColumnarInputStream.java:33-42):
       // the header of EACH object is honored, so files under one prefix may
@@ -252,19 +242,14 @@ final class HadoopColumnarInput extends InputAdapter {
       // assumes one schema per load, so this mode reads per file and
       // unions by name. Driver-side listing — same as the reference's own
       // driver listObjects — so intended for moderate file counts.
-      if (fromHeader && conf.bool("per_file_schema", dflt = false)) {
+      if (fromHeader && conf.bool("per_file_schema")) {
         val fsPath = new Path(p)
         val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val nameOk: Path => Boolean = conf.str("path_filter") match {
-          case Some(g) =>
-            val gf = new org.apache.hadoop.fs.GlobFilter(g)
-            pp => gf.accept(pp)
-          case None => _ => true
-        }
+        val glob = conf.str("path_filter").map(new org.apache.hadoop.fs.GlobFilter(_))
         val files =
           if (fs.getFileStatus(fsPath).isDirectory)
             fs.listStatus(fsPath).toSeq.filter(_.isFile)
-              .filter(st => nameOk(st.getPath))
+              .filter(st => glob.forall(_.accept(st.getPath)))
               .map(_.getPath.toString).sorted
           else Seq(p)
         files.map(reader.csv(_))
@@ -330,7 +315,7 @@ final class HadoopFileInput(
     HadoopFiles.loadStreams(spark, path, name, partCount, conf) { p =>
       val r = HadoopFiles.reader(spark, conf)
       val merged =
-        if (mergeSchema) r.option("mergeSchema", conf.bool("merge_schema", dflt = false))
+        if (mergeSchema) r.option("mergeSchema", conf.bool("merge_schema"))
         else r
       merged.format(format).load(p)
     }
@@ -362,12 +347,12 @@ final class HadoopFileOutput(
         throw new IllegalArgumentException("bucket_by requires bucket_table"))
     }
     val w = HadoopFiles.writer(df, conf)
-      .option("compression", conf.str("codec", codec))
+      .option("compression", conf.str("codec").get)
       .format(format)
     bucketing match {
       case Some((cols, table)) =>
         w.option("path", out)
-          .bucketBy(conf.int("bucket_count", 8), cols.head, cols.tail: _*)
+          .bucketBy(conf.int("bucket_count"), cols.head, cols.tail: _*)
           .sortBy(cols.head, cols.tail: _*)
           .saveAsTable(table)
       case None => w.save(out)
@@ -377,7 +362,7 @@ final class HadoopFileOutput(
 
 private[adapters] object HadoopFileOutput {
   val bucketParams: Seq[ParamDef] = Seq(
-    ParamDef("bucket_by",
+    ParamDef.list("bucket_by",
       "Bucket columns: registers a bucketed+sorted table so equi-joins " +
         "and aggregations on these columns run exchange-free"),
     ParamDef("bucket_count", "Bucket count for bucket_by", Some(8)),
@@ -403,9 +388,9 @@ final class HadoopColumnarOutput extends OutputAdapter {
 
   def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit =
     HadoopFiles.writer(df, conf)
-      .option("sep", conf.str("delimiter", "\t"))
-      .option("header", conf.bool("header", dflt = false))
-      .option("compression", conf.str("codec", "none"))
+      .option("sep", conf.str("delimiter").get)
+      .option("header", conf.bool("header"))
+      .option("compression", conf.str("codec").get)
       .option("emptyValue", "")
       .csv(OutPath(path, subName))
 }
@@ -426,11 +411,11 @@ final class HadoopTextOutput extends OutputAdapter {
     val line =
       if (selected.columns.length == 1) selected.select(col(selected.columns.head).cast("string"))
       else selected.select(concat_ws(
-        conf.str("delimiter", "\t"),
+        conf.str("delimiter").get,
         selected.columns.toIndexedSeq.map(c => col(c).cast("string")): _*))
     line.write
       .mode("overwrite")
-      .option("compression", conf.str("codec", "none"))
+      .option("compression", conf.str("codec").get)
       .text(OutPath(path, subName))
   }
 }

@@ -2,7 +2,7 @@ package graft.adapters
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** JDBC columnar adapters, capability-parity with the reference
@@ -101,7 +101,7 @@ final class JdbcColumnarInput extends InputAdapter {
       ParamDef("nest_comments",
         "Whether /* */ comments nest when scanning the query for ? " +
           "placeholders (PostgreSQL/standard: true; MySQL, SQL Server, " +
-          "Oracle, SQLite end at the first close: false, the default)"),
+          "Oracle, SQLite end at the first close: false, the default)", Some(false)),
       ParamDef("partition_column", "Numeric column to range-split on"),
       ParamDef("lower_bound", "Partitioning lower bound"),
       ParamDef("upper_bound", "Partitioning upper bound")))
@@ -122,7 +122,7 @@ final class JdbcColumnarInput extends InputAdapter {
       r
     }
     val pieces = conf.str("query")
-      .map(JdbcPlaceholders.split(_, conf.bool("nest_comments", dflt = false)))
+      .map(JdbcPlaceholders.split(_, conf.bool("nest_comments")))
     val df = (conf.str("query"), conf.str("table")) match {
       case (Some(_), _) if pieces.exists(_.length > 1) =>
         // reference placeholder mode (JdbcColumnarInput.java:62-77):
@@ -180,22 +180,23 @@ final class JdbcColumnarOutput extends OutputAdapter {
     JdbcColumnarInput.connectionParams ++ Seq(
       ParamDef("table", "Destination table (defaults to the stream sub-name)"),
       ParamDef("batch_size", "INSERT batch size", Some(500)),
-      ParamDef("mode", "SaveMode: append/overwrite/errorifexists", Some("append")),
+      ParamDef.oneOf("mode", "SaveMode: append/overwrite/ignore/errorifexists",
+        "append", "overwrite", "ignore", "errorifexists"),
       HadoopFiles.writeColumnsParam,
-      ParamDef("upsert_keys",
-        "Comma-separated key columns: write becomes a keyed UPSERT into an " +
+      ParamDef.list("upsert_keys",
+        "Key columns: write becomes a keyed UPSERT into an " +
           "existing table (exactly-once per key on at-least-once delivery; " +
           "like any side-effecting sink, requires speculative execution off " +
           "or a unique key constraint on the target — " +
           "the keyed-target completion of the streaming foreachBatch sink)"),
-      ParamDef("upsert_dialect",
+      ParamDef.oneOf("upsert_dialect",
         "UPSERT statement dialect: 'update_insert' (portable UPDATE-then-" +
           "INSERT-if-absent inside a per-partition transaction, the " +
           "default — works on any target incl. Derby), 'merge' " +
           "(SQL-standard MERGE with a VALUES source: SQL Server, DB2, " +
           "H2), 'on_conflict' (PostgreSQL/SQLite INSERT .. ON CONFLICT), " +
           "'duplicate_key' (MySQL INSERT .. ON DUPLICATE KEY UPDATE)",
-        Some("update_insert"))))
+        "update_insert", "merge", "on_conflict", "duplicate_key")))
 
   import JdbcColumnarOutput.upsertSql
 
@@ -220,7 +221,7 @@ final class JdbcColumnarOutput extends OutputAdapter {
     // typed null binding: setObject(m, null) is optional in the JDBC
     // spec and rejected by several targets the dialects advertise —
     // mirror Spark's own JdbcUtils and use setNull(pos, sqlType)
-    val nullTypes = schema.fields.map(f => JdbcColumnarOutput.jdbcNullType(f.dataType))
+    val nullTypes = schema.fields.map(f => JdbcColumnarOutput.jdbcType(f.dataType)._1)
     df
       // co-locate every occurrence of a key in ONE partition: two
       // concurrent tasks holding the same key would otherwise both see
@@ -287,76 +288,56 @@ final class JdbcColumnarOutput extends OutputAdapter {
   def save(subName: String, df: DataFrame, path: String, conf: AdapterConf): Unit = {
     val table = conf.str("table").orElse(Option(subName).filter(_.nonEmpty)).getOrElse(
       throw new IllegalArgumentException("jdbcColumnar output needs 'table' or a stream name"))
-    conf.str("upsert_keys") match {
+    conf.strSeq("upsert_keys") match {
       case Some(ks) =>
-        val keys = ks.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        upsert(
-          HadoopFiles.selectColumns(df, conf), path, table, conf,
-          keys, conf.str("upsert_dialect", "update_insert"), conf.int("batch_size", 500))
-        return
-      case None => ()
+        upsert(HadoopFiles.selectColumns(df, conf), path, table, conf,
+          ks.map(_.trim).filter(_.nonEmpty), conf.str("upsert_dialect").get, conf.int("batch_size"))
+      case None =>
+        var writer = HadoopFiles.selectColumns(df, conf).write.format("jdbc")
+          .option("url", path)
+          .option("driver", conf.str("driver").get)
+          .option("dbtable", table)
+          // reference default batch size 500 (JdbcColumnarOutput.java:49-50)
+          .option("batchsize", conf.int("batch_size"))
+          .mode(conf.str("mode").get)
+        conf.str("user").foreach(u => writer = writer.option("user", u))
+        conf.str("password").foreach(p => writer = writer.option("password", p))
+        writer.save()
     }
-    var writer = HadoopFiles.selectColumns(df, conf).write.format("jdbc")
-      .option("url", path)
-      .option("driver", conf.str("driver").get)
-      .option("dbtable", table)
-      // reference default batch size 500 (JdbcColumnarOutput.java:49-50)
-      .option("batchsize", conf.int("batch_size", 500))
-      .mode(SaveMode.valueOf(conf.str("mode", "append").toLowerCase.capitalize match {
-        case "Errorifexists" => "ErrorIfExists"
-        case m => m
-      }))
-    conf.str("user").foreach(u => writer = writer.option("user", u))
-    conf.str("password").foreach(p => writer = writer.option("password", p))
-    writer.save()
   }
 }
 
 object JdbcColumnarOutput {
 
-  /** `java.sql.Types` code for typed NULL binding (setNull), mirroring
-    * Spark's JdbcUtils — untyped setObject(_, null) is optional in the
-    * JDBC spec and rejected by several real targets. */
-  private[adapters] def jdbcNullType(dt: org.apache.spark.sql.types.DataType): Int = {
+  /** A column type's `java.sql.Types` code for typed NULL binding
+    * (setNull, mirroring Spark's JdbcUtils — untyped setObject(_, null)
+    * is optional in the JDBC spec and rejected by several real targets),
+    * and its SQL type for a CAST around a `?` marker inside MERGE ..
+    * USING (VALUES ..) — Derby and DB2 reject untyped markers there. */
+  private[adapters] def jdbcType(dt: org.apache.spark.sql.types.DataType): (Int, String) = {
+    import java.sql.Types._
     import org.apache.spark.sql.types._
     dt match {
-      case LongType => java.sql.Types.BIGINT
-      case IntegerType => java.sql.Types.INTEGER
-      case ShortType => java.sql.Types.SMALLINT
-      case DoubleType => java.sql.Types.DOUBLE
-      case FloatType => java.sql.Types.REAL
-      case BooleanType => java.sql.Types.BOOLEAN
-      case DateType => java.sql.Types.DATE
-      case TimestampType => java.sql.Types.TIMESTAMP
-      case _: DecimalType => java.sql.Types.DECIMAL
-      case BinaryType => java.sql.Types.BLOB
-      case _ => java.sql.Types.VARCHAR
-    }
-  }
-
-  /** SQL type for a CAST around a `?` marker inside MERGE .. USING
-    * (VALUES ..) — Derby and DB2 reject untyped parameter markers there. */
-  private def sqlType(dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case LongType => "BIGINT"
-      case IntegerType => "INTEGER"
-      case ShortType => "SMALLINT"
-      case DoubleType => "DOUBLE"
-      case FloatType => "REAL"
-      case BooleanType => "BOOLEAN"
-      case DateType => "DATE"
-      case TimestampType => "TIMESTAMP"
-      case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
+      case LongType => (BIGINT, "BIGINT")
+      case IntegerType => (INTEGER, "INTEGER")
+      case ShortType => (SMALLINT, "SMALLINT")
+      case DoubleType => (DOUBLE, "DOUBLE")
+      case FloatType => (REAL, "REAL")
+      case BooleanType => (BOOLEAN, "BOOLEAN")
+      case DateType => (DATE, "DATE")
+      case TimestampType => (TIMESTAMP, "TIMESTAMP")
+      case d: DecimalType => (DECIMAL, s"DECIMAL(${d.precision},${d.scale})")
       // 4000 fits every merge target's plain-varchar ceiling (SQL
       // Server caps at 8000; 32672 is a Derby-ism, and Derby takes the
       // update_insert path, never this cast)
-      case _ => "VARCHAR(4000)"
+      case BinaryType => (BLOB, "VARCHAR(4000)")
+      case _ => (VARCHAR, "VARCHAR(4000)")
     }
   }
 
   /** Per-dialect single-row UPSERT statement with `?` markers in schema
-    * field order. Quoting follows what Spark's JDBC writer did when it
+    * field order, for the `merge`, `on_conflict` and `duplicate_key`
+    * dialects. Quoting follows what Spark's JDBC writer did when it
     * created the table: the TABLE name passes through verbatim (Spark
     * uses the dbtable string as given), while COLUMN names are quoted
     * (double quotes; backticks for the MySQL dialect) because
@@ -376,7 +357,7 @@ object JdbcColumnarOutput {
     dialect match {
       case "merge" =>
         val values = schema.fields
-          .map(f => s"CAST(? AS ${sqlType(f.dataType)})").mkString(", ")
+          .map(f => s"CAST(? AS ${jdbcType(f.dataType)._2})").mkString(", ")
         val on = keys.map(k => s"t.${q(k)} = s.${q(k)}").mkString(" AND ")
         val matched =
           if (nonKeys.isEmpty) ""
@@ -399,10 +380,6 @@ object JdbcColumnarOutput {
           else nonKeys.map(c => s"${q(c)} = VALUES(${q(c)})").mkString(", ")
         s"INSERT INTO $table ($colList) VALUES (${cols.map(_ => "?").mkString(", ")}) " +
           s"ON DUPLICATE KEY UPDATE $update"
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown upsert_dialect '$other' " +
-            "(update_insert | merge | on_conflict | duplicate_key)")
     }
   }
 

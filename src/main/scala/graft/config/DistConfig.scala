@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.adapters.{AdapterConf, Adapters, SelfDescribingFormat}
 import graft.io.ModelStore
 import graft.streaming.Ingest
 
@@ -19,10 +20,10 @@ import graft.streaming.Ingest
   *       "dest":   {"adapter": "hadoopParquet", "path": "...", "params": {}} } ] }
   * }}}
   *
-  * Params stay loosely typed (`Map[String, Any]`) exactly like the
-  * reference's `Map<String, Object>`; each adapter validates and coerces
-  * them against its declared [[graft.adapters.ParamDef]]s.
-  */
+  * Params stay a raw `Map[String, Any]`, like the reference's
+  * `Map<String, Object>`; [[DistConfig.parse]] checks every field, verb
+  * and param (against the verb's [[graft.adapters.ParamDef]]s) before
+  * any task runs. */
 final case class DistLocation(
     adapter: String,
     path: String,
@@ -46,11 +47,10 @@ final case class DistLocation(
   * `"ingest"` (streaming tasks only) names a registered streaming
   * ingest operator — [[graft.streaming.Ingest.ops]] is the single
   * source of truth for the registry, and `parse` rejects any other
-  * name — applied to the
-  * stream after the optional `transform`; `"model_dir"` points at the
-  * corpus the operator's offline models train from (required with
-  * `ingest`). A direction of chained ingest tasks runs the whole
-  * tier.
+  * name — applied to the stream after the optional `transform`;
+  * `"model_dir"` points at the corpus the operator's offline models
+  * train from (required with `ingest`). A direction of chained ingest
+  * tasks runs the whole tier.
   *
   * `"horizon_ms"` (claim-op ingest tasks only, round 19) bounds the
   * dedup HORIZON: the input must carry an event-time `ts` column, and
@@ -85,7 +85,12 @@ final case class DistTask(
     horizonMs: Option[Long] = None,
     lateness: String = "0 seconds",
     modelExport: Boolean = false,
-    modelFamilies: Seq[String] = Seq.empty)
+    modelFamilies: Seq[String] = Seq.empty) {
+  /** What DistMain runs: `verify`, `model_export`, `streaming` or `batch`. */
+  def kind: String =
+    if (verify) "verify" else if (modelExport) "model_export" else if (streaming) "streaming"
+    else "batch"
+}
 
 final case class DistConfig(directions: Map[String, Seq[DistTask]]) {
   def direction(name: String): Seq[DistTask] =
@@ -97,6 +102,33 @@ final case class DistConfig(directions: Map[String, Seq[DistTask]]) {
 
 object DistConfig {
   private val om = new ObjectMapper()
+
+  /** Each task field's JSON key and its value in a parsed task. */
+  private val taskFields: Seq[(String, DistTask => Any)] = Seq(
+    "source" -> (_.source), "dest" -> (_.dest), "transform" -> (_.transform),
+    "streaming" -> (_.streaming), "verify" -> (_.verify), "verify_columns" -> (_.verifyColumns),
+    "ingest" -> (_.ingest), "model_dir" -> (_.modelDir), "horizon_ms" -> (_.horizonMs),
+    "lateness" -> (_.lateness), "model_export" -> (_.modelExport),
+    "model_families" -> (_.modelFamilies))
+
+  private val locationFields: Seq[(String, DistLocation => Any)] = Seq(
+    "adapter" -> (_.adapter), "path" -> (_.path), "part_count" -> (_.partCount),
+    "name" -> (_.subName), "params" -> (_.params))
+
+  /** Per task kind, the fields DistMain reads: of the task, of its source
+    * and of its dest. Every other field must hold its default. A batch
+    * dest is only saved to, so its `part_count` is never read. */
+  private val reads: Map[String, (Set[String], Set[String], Set[String])] = {
+    val all = locationFields.map(_._1).toSet
+    val verbAndPath = Set("adapter", "path")
+    Map(
+      "batch" -> (Set("source", "dest", "transform"), all, all - "part_count"),
+      "verify" -> (Set("source", "dest", "verify", "verify_columns"), all, all),
+      "streaming" -> (Set("source", "dest", "streaming", "transform", "ingest", "model_dir",
+        "horizon_ms", "lateness"), verbAndPath, verbAndPath),
+      "model_export" -> (Set("source", "dest", "model_export", "model_families"),
+        verbAndPath, verbAndPath))
+  }
 
   def parse(json: String): DistConfig = {
     val root = om.readTree(json)
@@ -114,56 +146,12 @@ object DistConfig {
           strings(t, "verify_columns", where),
           str(t, "ingest", where),
           str(t, "model_dir", where),
-          integral(t, "horizon_ms", where, _.canConvertToLong).map(_.longValue()),
+          typed(t, "horizon_ms", where, "a JSON integer")(
+            v => v.isIntegralNumber && v.canConvertToLong)(_.longValue()),
           str(t, "lateness", where).getOrElse("0 seconds"),
           bool(t, "model_export", where),
           strings(t, "model_families", where))
-        // model_export is a self-contained batch verb (source = the
-        // training corpus, dest = the artifact dir): combining it with
-        // streaming/ingest/verify/transform would silently apply only
-        // one of the two semantics
-        require(!task.modelExport || (!task.streaming && !task.verify &&
-            task.ingest.isEmpty && task.transform.isEmpty),
-          s"$where: 'model_export' is a standalone " +
-            "batch task and cannot combine with streaming/ingest/verify/transform")
-        require(task.modelFamilies.isEmpty || task.modelExport,
-          s"$where: 'model_families' only applies " +
-            "to a 'model_export' task")
-        // fields the task's kind never reads fail too: DistMain runs a
-        // verify task before looking at transform or streaming, and a
-        // streaming task reads only each location's adapter and path
-        require(!task.verify || (task.transform.isEmpty && !task.streaming),
-          s"$where: a 'verify' task compares the two locations as stored " +
-            "and cannot combine with transform/streaming")
-        require(task.verifyColumns.isEmpty || task.verify,
-          s"$where: 'verify_columns' only applies to a 'verify' task")
-        for ((role, loc) <- Seq("source" -> task.source, "dest" -> task.dest))
-          require(!task.streaming || (loc.partCount == 0 && loc.params.isEmpty),
-            s"$where $role: a streaming task reads only 'adapter' and 'path', " +
-              "so 'part_count' and 'params' would be ignored")
-        // unknown names fail here, before any task of the direction
-        // writes output
-        val badFamilies = task.modelFamilies.filterNot(ModelStore.Families.contains)
-        require(badFamilies.isEmpty,
-          s"$where: unknown model_families " +
-            s"${badFamilies.mkString(", ")}; exportable: ${ModelStore.Families.mkString(", ")}")
-        require(task.ingest.forall(Ingest.ops.contains),
-          s"$where: unknown ingest op " +
-            s"'${task.ingest.get}'; registered: ${Ingest.ops.mkString(", ")}")
-        // exact op set, not a substring test: apply_claims CONSUMES a
-        // ledger and would silently ignore a horizon
-        require(task.horizonMs.isEmpty || task.ingest.exists(Ingest.claimOps.contains),
-          s"$where: 'horizon_ms' only applies to " +
-            s"claim-op ingest tasks (${Ingest.claimOps.mkString(" / ")})")
-        // fail loudly, at parse time: a batch task with `ingest` set
-        // would otherwise copy the data verbatim — the quality/
-        // contamination gate silently never runs and the output looks
-        // plausible (ADVICE r16). Matches the streaming path's
-        // model_dir check in posture.
-        require(task.ingest.isEmpty || task.streaming,
-          s"$where: 'ingest' (${task.ingest.get}) " +
-            "requires '\"streaming\": true' — a batch task would ignore it " +
-            "and copy the data unprocessed")
+        check(task, t, where)
         task
       }.toSeq
       e.getKey -> tasks
@@ -171,43 +159,91 @@ object DistConfig {
     DistConfig(dirs)
   }
 
-  /** A JSON boolean, false when absent. Jackson's `asBoolean` would read
-    * `"yes"` (or any other non-boolean) as false, silently. */
+  /** What a task's run would reject, before any task runs: fields its
+    * kind does not read, unknown names, each location's verb and params. */
+  private def check(task: DistTask, t: JsonNode, where: String): Unit = {
+    val kind = task.kind
+    val (taskReads, sourceReads, destReads) = reads(kind)
+    fields(t, taskFields, taskReads, task, DistTask(task.source, task.dest), where, s"a $kind task")
+    val locations = Seq(("source", task.source, sourceReads), ("dest", task.dest, destReads))
+    for ((role, loc, read) <- locations)
+      fields(t.get(role), locationFields, read, loc, DistLocation(loc.adapter, loc.path),
+        s"$where $role", s"a $kind $role")
+    // the claim ledger's layout (batch_id-partitioned parquet, read back
+    // by apply_claims/claimView) is part of the claim protocol
+    val claimOp = task.ingest.filter(Ingest.claimOps.contains)
+    for (op <- claimOp)
+      require(task.dest.adapter == "hadoopParquet",
+        s"$where dest: ingest op '$op' writes a batch_id-partitioned parquet claim " +
+          s"ledger; dest adapter must be hadoopParquet, got '${task.dest.adapter}'")
+    for ((role, loc, _) <- locations) {
+      def at[A](body: => A): A =
+        try body catch {
+          case x: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"$where $role: ${x.getMessage}", x)
+        }
+      // a verify task loads its dest; the other kinds save to it
+      val saved = role == "dest" && kind != "verify"
+      val a = at(if (saved) Adapters.output(loc.adapter) else Adapters.input(loc.adapter))
+      kind match {
+        // building the conf checks param names, required params and values
+        case "batch" | "verify" => at(AdapterConf(a.meta, loc.params))
+        case "streaming" if !a.isInstanceOf[SelfDescribingFormat] =>
+          val formats = (if (saved) Adapters.outputs else Adapters.inputs)
+            .collect { case (v, _: SelfDescribingFormat) => v }
+          throw new IllegalArgumentException(s"$where $role: streaming tasks support " +
+            s"${formats.mkString("/")}, got '${loc.adapter}'")
+        case _ => ()
+      }
+    }
+    val badFamilies = task.modelFamilies.filterNot(ModelStore.Families.contains)
+    require(badFamilies.isEmpty, s"$where: unknown model_families " +
+      s"${badFamilies.mkString(", ")}; exportable: ${ModelStore.Families.mkString(", ")}")
+    for (op <- task.ingest) {
+      require(Ingest.ops.contains(op),
+        s"$where: unknown ingest op '$op'; registered: ${Ingest.ops.mkString(", ")}")
+      require(task.modelDir.isDefined,
+        s"$where: ingest op '$op' requires 'model_dir' (the offline training corpus)")
+    }
+    // exact op set, not a substring test: apply_claims CONSUMES a
+    // ledger and would silently ignore a horizon
+    require(task.horizonMs.isEmpty || claimOp.isDefined, s"$where: 'horizon_ms' only " +
+      s"applies to claim-op ingest tasks (${Ingest.claimOps.mkString(" / ")})")
+  }
+
+  /** Unknown keys fail; a known field outside `read` must hold its value
+    * in `dflt`. */
+  private def fields[A](n: JsonNode, known: Seq[(String, A => Any)], read: Set[String],
+      parsed: A, dflt: A, where: String, what: String): Unit = {
+    val names = known.map(_._1)
+    for (k <- n.fieldNames().asScala if !names.contains(k))
+      throw new IllegalArgumentException(
+        s"$where: unknown field '$k'; $what reads ${names.filter(read).mkString(", ")}")
+    for ((k, get) <- known if !read(k) && get(parsed) != get(dflt))
+      throw new IllegalArgumentException(s"$where: $what does not read '$k'")
+  }
+
+  /** `field` when present, failing unless `ok`: Jackson's own readers
+    * would take `"yes"` as false, `null` as the text "null", a bare
+    * string as an empty array and `"four"` as 0 (2.5 as 2), silently. */
+  private def typed[A](n: JsonNode, field: String, where: String, expected: String)(
+      ok: JsonNode => Boolean)(get: JsonNode => A): Option[A] =
+    Option(n.get(field)).map { v =>
+      if (!ok(v)) throw new IllegalArgumentException(s"$where: '$field' must be $expected, got $v")
+      get(v)
+    }
+
   private def bool(n: JsonNode, field: String, where: String): Boolean =
-    Option(n.get(field)).exists { v =>
-      if (!v.isBoolean) throw new IllegalArgumentException(
-        s"$where: '$field' must be a JSON boolean (true/false), got $v")
-      v.booleanValue()
-    }
+    typed(n, field, where, "a JSON boolean (true/false)")(_.isBoolean)(_.booleanValue())
+      .getOrElse(false)
 
-  /** A JSON string, when present. Jackson's `asText` would read `null`
-    * as the text "null" (a relative path, a SQL statement), silently. */
   private def str(n: JsonNode, field: String, where: String): Option[String] =
-    Option(n.get(field)).map { v =>
-      if (!v.isTextual) throw new IllegalArgumentException(
-        s"$where: '$field' must be a JSON string, got $v")
-      v.textValue()
-    }
+    typed(n, field, where, "a JSON string")(_.isTextual)(_.textValue())
 
-  /** A JSON array of strings, empty when absent. `elements()` of a bare
-    * string is empty, which would read as "no restriction", silently. */
   private def strings(n: JsonNode, field: String, where: String): Seq[String] =
-    Option(n.get(field)).map { v =>
-      if (!v.isArray || !v.elements().asScala.forall(_.isTextual))
-        throw new IllegalArgumentException(
-          s"$where: '$field' must be a JSON array of strings, got $v")
-      v.elements().asScala.map(_.textValue()).toSeq
-    }.getOrElse(Seq.empty)
-
-  /** A JSON integer that `fits`, when present. Jackson's `asInt`/`asLong`
-    * would read `"four"` as 0 and truncate 2.5 to 2, silently. */
-  private def integral(n: JsonNode, field: String, where: String,
-      fits: JsonNode => Boolean): Option[JsonNode] =
-    Option(n.get(field)).map { v =>
-      if (!v.isIntegralNumber || !fits(v)) throw new IllegalArgumentException(
-        s"$where: '$field' must be a JSON integer, got $v")
-      v
-    }
+    typed(n, field, where, "a JSON array of strings")(
+      v => v.isArray && v.elements().asScala.forall(_.isTextual))(
+      _.elements().asScala.map(_.textValue()).toSeq).getOrElse(Seq.empty)
 
   private def location(task: JsonNode, field: String, where: String): DistLocation = {
     val n = Option(task.get(field)).getOrElse(
@@ -217,11 +253,11 @@ object DistConfig {
     DistLocation(
       adapter = req("adapter"),
       path = req("path"),
-      partCount = integral(n, "part_count", s"$where $field", _.canConvertToInt)
-        .map(_.intValue()).getOrElse(0),
+      partCount = typed(n, "part_count", s"$where $field", "a JSON integer")(
+        v => v.isIntegralNumber && v.canConvertToInt)(_.intValue()).getOrElse(0),
       subName = str(n, "name", s"$where $field"),
-      params = Option(n.get("params")).map(any(_).asInstanceOf[Map[String, Any]])
-        .getOrElse(Map.empty))
+      params = typed(n, "params", s"$where $field", "a JSON object")(_.isObject)(
+        any(_).asInstanceOf[Map[String, Any]]).getOrElse(Map.empty))
   }
 
   /** JsonNode → plain Scala values (String/Boolean/Long/Double/Seq/Map). */

@@ -232,16 +232,4 @@ object Html {
           sum(when(expr(TextAnalysis.extQualitySql("qt", "w")),
             1L).otherwise(0L)).as("kept"))
     })
-
-  /** The exploded numbered-line frame (doc_id, source, line_no, line,
-    * fp) shared by the boilerplate table and HtmlSpec. */
-  private[graft] def htmlLines(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        expr(s"split(${extractSql(htmlSql)}, '\\n')").as("lines"))
-      .select(col("doc_id"), col("source"),
-        posexplode(col("lines")).as(Seq("line_no", "line")))
-      .select(col("doc_id"), col("source"), col("line_no"), col("line"),
-        expr(h("line")).as("fp"))
 }

@@ -22,10 +22,6 @@ object Q {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(oracle.stripMargin.trim), fn)
 
-  /** Non-SQL-expressible query: driver records a weaker rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, fn)
-
   /** One dialect-shared SQL string executed verbatim by BOTH engines:
     * Spark runs it via `spark.sql` over the registered table views, the
     * oracle runs the identical text in DuckDB — exercising the SQL-text

@@ -473,9 +473,7 @@ object Similarity {
       .orderBy(col("qh"), col("query_id")).limit(nq(s, dir))
       .select(col("query_id"), col("q_emb"))
     // per-query LUT: |Q| x M x K partial dots — tiny, broadcast
-    val lut = q.crossJoin(cb)
-      .select(col("query_id"), col("m"), col("k").as("code"),
-        expr(s"dot_dec(slice(q_emb, m * $PQ_DS + 1, $PQ_DS), cb)").as("ldot"))
+    val lut = pqLut(q, cb)
     val adc = codes.join(broadcast(lut), Seq("m", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id").as("cand_id"))
@@ -723,6 +721,14 @@ object Similarity {
     * the r10 exponential-plan lesson, solved at the source here).
     * This is the FAISS shape: the coarse quantizer lives in RAM —
     * ~26 MB at |C| = 1e5 / d = 64. */
+  /** The ADC lookup table (query_id, m, code, ldot): each query's
+    * partial dot with every codebook entry, |Q|·M·K rows. */
+  private def pqLut(
+      q: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    q.crossJoin(cb).select(col("query_id"), col("m"), col("k").as("code"),
+      expr(s"dot_dec(slice(q_emb, m * $PQ_DS + 1, $PQ_DS), cb)").as("ldot"))
+
   private def localizedModel(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
@@ -1869,9 +1875,9 @@ object Similarity {
         .select(col("query_id"), col("q_emb"), col("cell"))
       // trained codebook + memoized encode (q_ann_pq is the builder)
       val (cb, codes) = pqCodebookAndCodes(s, dir, rebuildMemo = false)
-      val lut = q.crossJoin(cb)
-        .select(col("query_id"), col("m"), col("k").as("code"),
-          expr(s"dot_dec(slice(q_emb, m * $PQ_DS + 1, $PQ_DS), cb)").as("ldot"))
+      // driver-localized like the centroid models, so the broadcast
+      // below pins a bounded model frame
+      val lut = localizedModel(pqLut(q, cb))
       // cell-routed candidate pairs: the IVF prune happens BEFORE any
       // PQ work — codes join only the probed candidates
       val p = assign
@@ -1884,10 +1890,11 @@ object Similarity {
         .join(broadcast(lut), Seq("query_id", "m", "code"))
         .groupBy(col("query_id"), col("cand_id"))
         .agg(sum(col("ldot").cast("decimal(28,12)")).as("adc"))
-      val top = adc
+      // <= |Q|·3 survivors, driver-localized for the same reason
+      val top = localizedModel(adc
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("cand_id"))))
-        .filter(col("rn") <= 3)
+        .filter(col("rn") <= 3))
       e.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
         .join(broadcast(top), "cand_id")
         .join(broadcast(q.select(col("query_id"), col("q_emb"))), "query_id")
@@ -1960,9 +1967,7 @@ object Similarity {
           expr(qHash).as("qh"))
         .orderBy(col("qh"), col("query_id")).limit(nq(s, dir))
         .select(col("query_id"), col("q_emb"), col("cell"))
-      val lut = q.crossJoin(cb)
-        .select(col("query_id"), col("m"), col("k").as("code"),
-          expr(s"dot_dec(slice(q_emb, m * $PQ_DS + 1, $PQ_DS), cb)").as("ldot"))
+      val lut = pqLut(q, cb)
       val qc = q.join(broadcast(cents), "cell")
         .select(col("query_id"), expr(dot("q_emb", "c_emb")).cast("decimal(18,12)").as("qcd"))
       val p = assign
@@ -2061,9 +2066,7 @@ object Similarity {
         .filter(col("crn") <= 2)
         .select(col("query_id"), col("pcell"),
           col("cd").cast("decimal(18,12)").as("qcd"))
-      val lut = q.crossJoin(cb)
-        .select(col("query_id"), col("m"), col("k").as("code"),
-          expr(s"dot_dec(slice(q_emb, m * $PQ_DS + 1, $PQ_DS), cb)").as("ldot"))
+      val lut = pqLut(q, cb)
       val p = assign
         .select(col("vec_id").as("cand_id"), col("cell").as("x_cell"))
         .join(broadcast(probes),

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.adapters.{AdapterConf, Adapters, SelfDescribingFormat}
+import graft.adapters.{Adapter, AdapterConf, Adapters, SelfDescribingFormat}
 import graft.config.{DistConfig, DistLocation, DistTask}
 import graft.io.Sessions
 
@@ -71,10 +71,12 @@ object DistMain {
     * destination subdirectory, optionally prefixed by dest.name. */
   def runDirection(spark: SparkSession, tasks: Seq[DistTask], direction: String): Unit =
     tasks.zipWithIndex.foreach { case (task, i) =>
-      if (task.verify) runVerifyTask(spark, task, direction, i)
-      else if (task.modelExport) runModelExportTask(spark, task)
-      else if (task.streaming) runStreamingTask(spark, task)
-      else runBatchTask(spark, task, direction, i)
+      task.kind match {
+        case "verify" => runVerifyTask(spark, task, direction, i)
+        case "model_export" => runModelExportTask(spark, task)
+        case "streaming" => runStreamingTask(spark, task)
+        case _ => runBatchTask(spark, task, direction, i)
+      }
     }
 
   /** `"model_export": true` task — train the requested model families
@@ -195,16 +197,12 @@ object DistMain {
     * checkpoint under `<dest>/_checkpoint` — re-running the direction
     * processes ONLY files added since the last run (exactly-once
     * incremental backfill; stateless or windowed-append transforms).
-    * Self-describing file formats only: the registry's
-    * [[graft.adapters.SelfDescribingFormat]] verbs. */
+    * Self-describing file formats only: `DistConfig.parse` admits only the
+    * registry's [[graft.adapters.SelfDescribingFormat]] verbs here. */
   private def runStreamingTask(spark: SparkSession, task: DistTask): Unit = {
-    def fmt(registry: Map[String, Any], adapter: String): String = {
-      val formats = registry.collect { case (v, a: SelfDescribingFormat) => v -> a.format }
-      formats.getOrElse(adapter, throw new IllegalArgumentException(
-        s"streaming tasks support ${formats.keys.mkString("/")}, got '$adapter'"))
-    }
+    def fmt(a: Adapter): String = a.asInstanceOf[SelfDescribingFormat].format
     val (inFmt, outFmt) =
-      (fmt(Adapters.inputs, task.source.adapter), fmt(Adapters.outputs, task.dest.adapter))
+      (fmt(Adapters.input(task.source.adapter)), fmt(Adapters.output(task.dest.adapter)))
     val schema = spark.read.format(inFmt).load(task.source.path).schema
     val stream = spark.readStream.format(inFmt).schema(schema).load(task.source.path)
     val transformed = task.transform match {
@@ -221,9 +219,8 @@ object DistMain {
     // checkpointed. Models train from `model_dir` (offline corpus).
     val df = task.ingest match {
       case Some(op) =>
-        val md = task.modelDir.getOrElse(throw new IllegalArgumentException(
-          s"ingest task '$op' requires model_dir (the offline training corpus)"))
-        graft.streaming.Ingest(spark, op, md, transformed, task.horizonMs, task.lateness)
+        graft.streaming.Ingest(spark, op, task.modelDir.get, transformed, task.horizonMs,
+          task.lateness)
       case None => transformed
     }
     // claim-op stages persist their LEDGER through the batch_id-
@@ -231,16 +228,9 @@ object DistMain {
     // deliveries, replay-safe, and compactable via
     // [[graft.streaming.Streams.compactClaims]] — a long-running
     // direction's ledger no longer grows without bound. apply_claims
-    // reads either layout through claimView.
+    // reads either layout through claimView; `DistConfig.parse` requires
+    // these tasks' dest to be hadoopParquet.
     if (task.ingest.exists(graft.streaming.Ingest.claimOps.contains)) {
-      // the claim ledger's layout (batch_id-partitioned parquet, read
-      // back by apply_claims/claimView) is part of the claim protocol —
-      // fail fast on a dest adapter the sink would silently ignore
-      // (ADVICE r18) instead of substituting parquet two layers deep
-      require(task.dest.adapter == "hadoopParquet",
-        s"ingest op '${task.ingest.get}' writes a batch_id-partitioned " +
-          s"parquet claim ledger; dest adapter must be hadoopParquet, " +
-          s"got '${task.dest.adapter}'")
       def startLedger() = df.writeStream
         .foreachBatch((batch: org.apache.spark.sql.DataFrame, id: Long) =>
           graft.streaming.Streams.upsertClaimBatch(batch, id, task.dest.path))

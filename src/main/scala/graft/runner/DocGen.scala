@@ -1,32 +1,30 @@
 package graft.runner
 
-import graft.adapters.{AdapterMeta, Adapters}
+import graft.adapters.{AdapterMeta, Adapters, ParamDef, ParamKind}
 
 /** Adapter documentation generator — parity with the reference's DocGen
   * (datacooker-dist-cli test-scope tool rendering every adapter's meta to
   * HTML, DocGen.java:42-227): renders the registry's declared metadata
   * (verbs, descriptions, params with defaults, path examples, an example
   * JSON task) to Markdown. The single source of truth is the same
-  * [[graft.adapters.ParamDef]] metadata that validates configs at run
-  * time, so docs cannot drift from behavior.
+  * [[graft.adapters.ParamDef]] metadata that `DistConfig.parse` checks
+  * every config against before any task runs, so docs cannot drift from
+  * behavior.
   */
 object DocGen {
 
-  /** Example value for a param: its declared default when present, else
-    * a plausible value keyed by the param's (shared-by-convention) name.
+  /** Example value for a param: its declared default when present, a
+    * two-column list for a list-valued param, else a plausible value keyed
+    * by the param's (shared-by-convention) name.
     * These examples are load-bearing: PropertySpec parses every verb's
     * generated config and validates it against the adapter's ParamDefs,
     * so an adapter adding a param without docs coverage fails the build
     * (the reference's DocGen.java:209-227 generates its example configs
     * from adapter meta the same way). */
-  private def exampleValue(p: graft.adapters.ParamDef): Any =
-    p.default.getOrElse(p.name match {
-      case "columns" | "sort_by" | "partition_by" | "schema_default" |
-          "zorder_by" => Seq("col_a", "col_b")
-      case "upsert_keys" => Seq("id")
-      case "delimiter" => ","
-      case "header" => true
-      case "url" => "jdbc:postgresql://db.example:5432/app"
+  private def exampleValue(p: ParamDef): Any = (p.default, p.kind) match {
+    case (Some(d), _) => d
+    case (None, ParamKind.StrList) => Seq("col_a", "col_b")
+    case _ => p.name match {
       case "driver" => "org.postgresql.Driver"
       case "user" => "app"
       case "password" => "secret"
@@ -43,7 +41,8 @@ object DocGen {
       case "path_filter" => "*.parquet"
       case "query_name" => "q_agg_pricing"
       case _ => "value"
-    })
+    }
+  }
 
   private val om = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -74,29 +73,35 @@ object DocGen {
          |  "dest":   $loc}]}""".stripMargin
   }
 
+  /** The registry's two sections, each verb once: (title, metas, isInput). */
+  private def sections: Seq[(String, Seq[AdapterMeta], Boolean)] = Seq(
+    ("Input adapters", Adapters.inputs.values.map(_.meta).toSeq.distinctBy(_.verb), true),
+    ("Output adapters", Adapters.outputs.values.map(_.meta).toSeq.distinctBy(_.verb), false))
+
+  private val columns = Seq("param", "type", "description", "default", "required")
+
+  /** A param's table cells; `code` renders a literal, `text` prose. */
+  private def cells(p: ParamDef, code: String => String, text: String => String): Seq[String] =
+    Seq(code(p.name), text(p.kind.name), text(p.descr),
+      p.default.fold("—")(d => code(d.toString)), if (p.required) "yes" else "no")
+
   def render(): String = {
     val sb = new StringBuilder
     sb ++= "# Adapter reference\n\nGenerated from the adapter registry"
     sb ++= " (`graft.adapters.Adapters`); regenerate with `sbt \"runMain graft.runner.DocGen\"`.\n"
-    def section(title: String, metas: Seq[AdapterMeta], isInput: Boolean): Unit = {
+    for ((title, metas, isInput) <- sections) {
       sb ++= s"\n## $title\n"
       metas.foreach { m =>
         sb ++= s"\n### `${m.verb}`\n\n${m.descr}\n\n"
         sb ++= s"Path examples: ${m.pathExamples.map("`" + _ + "`").mkString(", ")}\n\n"
         if (m.params.nonEmpty) {
-          sb ++= "| param | description | default | required |\n|---|---|---|---|\n"
-          m.params.foreach { p =>
-            sb ++= s"| `${p.name}` | ${p.descr} | ${p.default.map(d => s"`$d`").getOrElse("—")} | ${if (p.required) "yes" else "no"} |\n"
-          }
+          sb ++= columns.mkString("| ", " | ", " |\n") + columns.map(_ => "---").mkString("|", "|", "|\n")
+          m.params.foreach(p => sb ++= cells(p, "`" + _ + "`", identity).mkString("| ", " | ", " |\n"))
         }
         sb ++= s"\nExample config (every param shown with its default or an example):\n\n"
         sb ++= s"```json\n${exampleTask(m, isInput)}\n```\n"
       }
     }
-    def distinctMetas(ms: Iterable[AdapterMeta]): Seq[AdapterMeta] =
-      ms.toSeq.distinctBy(_.verb)
-    section("Input adapters", distinctMetas(Adapters.inputs.values.map(_.meta)), isInput = true)
-    section("Output adapters", distinctMetas(Adapters.outputs.values.map(_.meta)), isInput = false)
     sb ++= s"""
       |## Accepted parity gaps
       |
@@ -143,9 +148,9 @@ object DocGen {
     * parity with the reference's Velocity-templated HTML DocGen
     * (DocGen.java:42-207). Single source of truth stays the ParamDef
     * registry; the HTML is a second VIEW, not a second model: verbs,
-    * descriptions, params, defaults, path examples and the runnable
+    * descriptions, params, types, defaults, path examples and the runnable
     * example config all come from the same meta objects the Markdown
-    * render and run-time validation use. */
+    * render and config parsing use. */
   def renderHtml(): String = {
     def esc(s: String): String = s
       .replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -163,7 +168,7 @@ object DocGen {
     sb ++= "</head>\n<body>\n<h1>Adapter reference</h1>\n"
     sb ++= "<p>Generated from the adapter registry (<code>graft.adapters.Adapters</code>); "
     sb ++= "regenerate with <code>sbt \"runMain graft.runner.DocGen\"</code>.</p>\n"
-    def section(title: String, metas: Seq[AdapterMeta], isInput: Boolean): Unit = {
+    for ((title, metas, isInput) <- sections) {
       sb ++= s"<h2>${esc(title)}</h2>\n"
       metas.foreach { m =>
         sb ++= s"""<h3 id="${esc(m.verb)}"><code>${esc(m.verb)}</code></h3>\n"""
@@ -171,22 +176,15 @@ object DocGen {
         sb ++= "<p>Path examples: " +
           m.pathExamples.map(p => s"<code>${esc(p)}</code>").mkString(", ") + "</p>\n"
         if (m.params.nonEmpty) {
-          sb ++= "<table>\n<tr><th>param</th><th>description</th><th>default</th><th>required</th></tr>\n"
-          m.params.foreach { p =>
-            sb ++= s"<tr><td><code>${esc(p.name)}</code></td><td>${esc(p.descr)}</td>" +
-              s"<td>${p.default.map(d => s"<code>${esc(d.toString)}</code>").getOrElse("—")}</td>" +
-              s"<td>${if (p.required) "yes" else "no"}</td></tr>\n"
-          }
+          sb ++= columns.mkString("<table>\n<tr><th>", "</th><th>", "</th></tr>\n")
+          m.params.foreach(p => sb ++= cells(p, c => s"<code>${esc(c)}</code>", esc)
+            .mkString("<tr><td>", "</td><td>", "</td></tr>\n"))
           sb ++= "</table>\n"
         }
         sb ++= "<p>Example config:</p>\n"
         sb ++= s"<pre>${esc(exampleTask(m, isInput))}</pre>\n"
       }
     }
-    def distinctMetas(ms: Iterable[AdapterMeta]): Seq[AdapterMeta] =
-      ms.toSeq.distinctBy(_.verb)
-    section("Input adapters", distinctMetas(Adapters.inputs.values.map(_.meta)), isInput = true)
-    section("Output adapters", distinctMetas(Adapters.outputs.values.map(_.meta)), isInput = false)
     sb ++= "</body>\n</html>\n"
     sb.result()
   }

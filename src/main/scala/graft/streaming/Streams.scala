@@ -39,8 +39,11 @@ object Streams {
 
   /** Tumbling 1-hour windowed counts/sums per event_type, 2h watermark. */
   def windowedAgg(events: DataFrame): DataFrame =
+    hourly(events.withWatermark("ts", "2 hours"))
+
+  /** Hourly counts/sums per event_type of a watermarked stream. */
+  private def hourly(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("cnt"),
@@ -451,14 +454,7 @@ object Streams {
     * declaration upstream drives eviction in both (redefining it between
     * stateful operators is disallowed). */
   def dedupThenWindow(events: DataFrame): DataFrame =
-    dedup(events) // declares the watermark
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("value").cast("decimal(18,2)")).as("sum_value"))
-      .select(
-        col("window.start").as("hour"),
-        col("event_type"), col("cnt"), col("sum_value"))
+    hourly(dedup(events)) // dedup declares the watermark
 
   final case class BandClaim(bucket: Long, doc_id: Long, keeper_id: Long)
 
@@ -490,9 +486,7 @@ object Streams {
   def nearDedup(
       docs: DataFrame, horizonMs: Option[Long] = None,
       lateness: String = "0 seconds"): Dataset[BandClaim] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.GraftRuntime.ensure(spark)
+    graft.functions.GraftRuntime.ensure(docs.sparkSession)
     val seeds = (0 until 16).map(i => graft.functions.CrossHash.local(s"seed#$i"))
     val seedArr = seeds.map(sd => s"${sd}L").mkString(",")
     // signature + band buckets as ONE native loop per row
@@ -506,18 +500,13 @@ object Streams {
     // (band, 4-slot) partitioning — the batch-twin equality gate in
     // StreamingSpec is unchanged) runs at ~4.4k docs/s single-node
     // (docs/stream_bench.md), 8x the HOF form.
-    val tsTail = if (horizonMs.isDefined) Seq("ts") else Nil
-    val sigs = docs
-      .selectExpr(Seq("doc_id", "shingles(split(trim(text), '\\\\s+'), 3) AS sh") ++ tsTail: _*)
-      .where("size(sh) > 0")
-      .selectExpr(Seq("doc_id", s"minhash_bands(sh, array($seedArr), 4) AS bks") ++ tsTail: _*)
-      .where("bks IS NOT NULL")
-      .selectExpr(Seq("doc_id", "explode(bks) AS bucket") ++ tsTail: _*)
-    horizonMs match {
-      case Some(h) =>
-        firstClaimHorizon(sigs.withWatermark("ts", lateness)
-          .as[(Long, Long, java.sql.Timestamp)], h)(BandClaim.apply)
-      case None => firstClaim(sigs.as[(Long, Long)])(BandClaim.apply)
+    bandClaims(horizonMs, lateness) { ts =>
+      docs
+        .selectExpr(Seq("doc_id", "shingles(split(trim(text), '\\\\s+'), 3) AS sh") ++ ts: _*)
+        .where("size(sh) > 0")
+        .selectExpr(Seq("doc_id", s"minhash_bands(sh, array($seedArr), 4) AS bks") ++ ts: _*)
+        .where("bks IS NOT NULL")
+        .selectExpr(Seq("doc_id", "explode(bks) AS bucket") ++ ts: _*)
     }
   }
 
@@ -544,20 +533,28 @@ object Streams {
   def urlDedup(
       urls: DataFrame, horizonMs: Option[Long] = None,
       lateness: String = "0 seconds"): Dataset[BandClaim] = {
-    val spark = urls.sparkSession
-    import spark.implicits._
-    graft.functions.GraftRuntime.ensure(spark)
-    val tsTail = if (horizonMs.isDefined) Seq("ts") else Nil
+    graft.functions.GraftRuntime.ensure(urls.sparkSession)
     val normed =
       if (urls.columns.contains("norm")) urls
       else graft.queries.Url.parseNorm(urls)
-    val keys = normed.selectExpr(
-      Seq("doc_id", s"${graft.functions.CrossHash.h("norm")} AS bucket") ++ tsTail: _*)
+    bandClaims(horizonMs, lateness)(ts => normed.selectExpr(
+      Seq("doc_id", s"${graft.functions.CrossHash.h("norm")} AS bucket") ++ ts: _*))
+  }
+
+  /** The (bucket, doc_id, keeper_id) claims of the `(doc_id, bucket)`
+    * frame `keys` builds — given `Seq("ts")` to carry along when a
+    * horizon is set: the [[firstClaimHorizon]] fold under a watermark on
+    * `ts` with a horizon, else the unbounded [[firstClaim]] fold. */
+  private def bandClaims(horizonMs: Option[Long], lateness: String)(
+      keys: Seq[String] => DataFrame): Dataset[BandClaim] = {
+    val df = keys(horizonMs.map(_ => "ts").toSeq)
+    val spark = df.sparkSession
+    import spark.implicits._
     horizonMs match {
-      case Some(hz) =>
-        firstClaimHorizon(keys.withWatermark("ts", lateness)
-          .as[(Long, Long, java.sql.Timestamp)], hz)(BandClaim.apply)
-      case None => firstClaim(keys.as[(Long, Long)])(BandClaim.apply)
+      case Some(h) =>
+        firstClaimHorizon(df.withWatermark("ts", lateness)
+          .as[(Long, Long, java.sql.Timestamp)], h)(BandClaim.apply)
+      case None => firstClaim(df.as[(Long, Long)])(BandClaim.apply)
     }
   }
 
@@ -677,20 +674,13 @@ object Streams {
   def simhashBlocksDedup(
       docs: DataFrame, bB: Int = 10, horizonMs: Option[Long] = None,
       lateness: String = "0 seconds"): Dataset[BandClaim] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.functions.GraftRuntime.ensure(spark)
-    val tsTail = if (horizonMs.isDefined) Seq("ts") else Nil
-    val keys = docs
-      .selectExpr(Seq("doc_id",
-        s"simhash_block_keys(split(trim(text), '\\\\s+'), $bB) AS bks") ++ tsTail: _*)
-      .where("bks IS NOT NULL")
-      .selectExpr(Seq("doc_id", "explode(bks) AS bucket") ++ tsTail: _*)
-    horizonMs match {
-      case Some(h) =>
-        firstClaimHorizon(keys.withWatermark("ts", lateness)
-          .as[(Long, Long, java.sql.Timestamp)], h)(BandClaim.apply)
-      case None => firstClaim(keys.as[(Long, Long)])(BandClaim.apply)
+    graft.functions.GraftRuntime.ensure(docs.sparkSession)
+    bandClaims(horizonMs, lateness) { ts =>
+      docs
+        .selectExpr(Seq("doc_id",
+          s"simhash_block_keys(split(trim(text), '\\\\s+'), $bB) AS bks") ++ ts: _*)
+        .where("bks IS NOT NULL")
+        .selectExpr(Seq("doc_id", "explode(bks) AS bucket") ++ ts: _*)
     }
   }
 

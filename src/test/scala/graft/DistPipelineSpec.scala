@@ -617,18 +617,14 @@ class DistPipelineSpec extends SparkSpec {
   }
 
   test("streaming task: a non-self-describing verb fails before any job, naming the accepted verbs") {
-    // the source path does not exist: reaching a read would fail with a
-    // missing-path error instead of the verb check
-    def run(source: String, dest: String) = {
-      val conf = DistConfig.parse(s"""{"d": [{"streaming": true,
+    // the check is in DistConfig.parse, so no task of the direction runs
+    def parse(source: String, dest: String) =
+      intercept[IllegalArgumentException](DistConfig.parse(s"""{"d": [{"streaming": true,
         "source": {"adapter": "$source", "path": "file:/nonexistent/in"},
-        "dest":   {"adapter": "$dest", "path": "file:/nonexistent/out"}}]}""")
-      intercept[IllegalArgumentException](
-        DistMain.runDirection(spark, conf.direction("d"), "d")).getMessage
-    }
-    assert(run("hadoopColumnar", "hadoopParquet") ==
+        "dest":   {"adapter": "$dest", "path": "file:/nonexistent/out"}}]}""")).getMessage
+    assert(parse("hadoopColumnar", "hadoopParquet") == "task d#0 source: " +
       "streaming tasks support hadoopParquet/hadoopJson/hadoopOrc, got 'hadoopColumnar'")
-    assert(run("hadoopOrc", "hadoopText") ==
+    assert(parse("hadoopOrc", "hadoopText") == "task d#0 dest: " +
       "streaming tasks support hadoopParquet/hadoopJson/hadoopOrc, got 'hadoopText'")
   }
 
@@ -1165,16 +1161,16 @@ class DistPipelineSpec extends SparkSpec {
   }
 
   test("unknown adapter and unknown param fail fast") {
-    val conf = DistConfig.parse(
+    // at parse, so the direction's earlier tasks never write output
+    val unknownVerb = intercept[IllegalArgumentException](DistConfig.parse(
       """{"d": [{"source": {"adapter": "nope", "path": "/x"},
-        |        "dest": {"adapter": "hadoopParquet", "path": "/y"}}]}""".stripMargin)
-    assertThrows[IllegalArgumentException](
-      DistMain.runDirection(spark, conf.direction("d"), "d"))
-    val conf2 = DistConfig.parse(
+        |        "dest": {"adapter": "hadoopParquet", "path": "/y"}}]}""".stripMargin))
+    assert(unknownVerb.getMessage.startsWith("task d#0 source: unknown input adapter 'nope'"))
+    val unknownParam = intercept[IllegalArgumentException](DistConfig.parse(
       s"""{"d": [{"source": {"adapter": "hadoopParquet", "path": "file:${sf()}/nation.parquet",
          |         "params": {"bogus_param": 1}},
-         |        "dest": {"adapter": "hadoopParquet", "path": "/y"}}]}""".stripMargin)
-    assertThrows[IllegalArgumentException](
-      DistMain.runDirection(spark, conf2.direction("d"), "d"))
+         |        "dest": {"adapter": "hadoopParquet", "path": "/y"}}]}""".stripMargin))
+    assert(unknownParam.getMessage.startsWith(
+      "task d#0 source: hadoopParquet: unknown param 'bogus_param'"))
   }
 }

@@ -350,11 +350,13 @@ class PlanShapeSpec extends SparkSpec {
       for (sub <- hinted) {
         // a LocalRelation is a driver-materialized bounded model frame
         // (the localizedModel centroid pattern — |C| rows by
-        // construction); GlobalLimit is the hash-ordered fixed-k sample
-        val fixedK = sub.collectFirst {
-          case _: GlobalLimit => ()
-          case _: LocalRelation => ()
-        }.isDefined
+        // construction); GlobalLimit is the hash-ordered fixed-k sample.
+        // stripTop, like the classes below: a join that merely CONTAINS
+        // the sample somewhere beneath grows with its other side
+        val fixedK = stripTop(sub) match {
+          case _: GlobalLimit | _: LocalRelation => true
+          case _ => false
+        }
         val trainedCentroids = stripTop(sub) match {
           case a: Aggregate =>
             a.groupingExpressions.flatMap(_.references.map(_.name)) == Seq("cell")
