@@ -103,6 +103,13 @@ object KernelMemo {
     }
   }
 
+  /** The one dispatch every memo-backed kernel goes through: [[rebuild]]
+    * for its designated builder (`rebuild = true`), [[reuse]] for every
+    * consumer. */
+  def apply(s: SparkSession, dir: String, kernel: String, rebuild: Boolean)(
+      build: => DataFrame): DataFrame =
+    if (rebuild) this.rebuild(s, dir, kernel)(build) else reuse(s, dir, kernel)(build)
+
   /** Drop all memoized kernels for a session — REQUIRED on session
     * stop (see the retention note on `frames`: entries never GC on
     * their own because the values pin the key). The checkpoint files

@@ -157,12 +157,9 @@ object Curation {
     val kI = s"source_overlap_inter#$srcExpr"
     val (n, interAgg) = memo match {
       case None => built
-      case Some(true) =>
-        (graft.io.KernelMemo.rebuild(s, dir, kN)(built._1),
-          graft.io.KernelMemo.rebuild(s, dir, kI)(built._2))
-      case Some(false) =>
-        (graft.io.KernelMemo.reuse(s, dir, kN)(built._1),
-          graft.io.KernelMemo.reuse(s, dir, kI)(built._2))
+      case Some(rebuild) =>
+        (graft.io.KernelMemo(s, dir, kN, rebuild)(built._1),
+          graft.io.KernelMemo(s, dir, kI, rebuild)(built._2))
     }
     // |S| for the grid-arm switch: a consumer reads it off the bounded
     // checkpointed n frame (one |S|-row count, no corpus pass); builders
@@ -1177,11 +1174,8 @@ object Curation {
     * production "score once, consume many" shape. */
   private def dsirWeightsMemo(
       s: org.apache.spark.sql.SparkSession, dir: String,
-      rebuildMemo: Boolean): org.apache.spark.sql.DataFrame = {
-    def build = dsirWeights(s, dir)
-    if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "dsir_weights")(build)
-    else graft.io.KernelMemo.reuse(s, dir, "dsir_weights")(build)
-  }
+      rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
+    graft.io.KernelMemo(s, dir, "dsir_weights", rebuildMemo)(dsirWeights(s, dir))
 
   /** Per-doc DSIR importance weights: (doc_id, lang, n_feats, weight).
     * Shared by q_dsir_weights (surfaces it) and q_dsir_select (ranks

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossHash.{duck, h}
@@ -43,6 +44,197 @@ object Dedup {
   private val duckShingles =
     "list_distinct(list_transform(generate_series(1, len(w)-2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))"
 
+  /** The (doc_id, lang, shingles) frame every word-3-gram kernel starts
+    * from — ONE definition so the pairing rules of the whole dedup
+    * family (jaccard, capped, clusters, incremental, recall truth)
+    * cannot silently drift apart. */
+  private[graft] def shingleFrame(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), expr(tokens).as("w"))
+      .filter(expr("size(w) >= 3"))
+      .select(col("doc_id"), col("lang"), expr(shingles).as("shingles"))
+
+  /** Exploded inverted-index postings (doc_id, lang, n_sh, v). The join
+    * key is xxhash64 of the exploded shingle — a flat codegen'd
+    * expression (HOF-embedded hashes run interpreted), and the 8-byte
+    * key shuffles cheaper than the shingle strings. Distinct shingles
+    * map 1:1 to distinct hashes (64-bit, ~collision-free). */
+  private[queries] def postingsOf(
+      sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    sh
+      .select(
+        col("doc_id"), col("lang"), expr("size(shingles)").as("n_sh"),
+        explode(col("shingles")).as("s"))
+      .select(col("doc_id"), col("lang"), col("n_sh"), xxhash64(col("s")).as("v"))
+
+  // ---- the kernel shapes of the dedup family, each written once -----------
+  // Partition-then-local-verify: explode keys, self-join on the key,
+  // keep each pair once, verify. Output column names come from the
+  // caller where sites name them differently, so one helper serves them
+  // all without an extra rename projection in any plan.
+
+  /** The blocked self-join predicate: both sides share every key column
+    * and each unordered doc pair appears once, as `a.doc_id < b.doc_id`. */
+  private def pairOn(keys: Seq[String]): Column =
+    expr((keys.map(k => s"a.$k = b.$k") :+ "a.doc_id < b.doc_id").mkString(" and "))
+
+  /** Postings pair count: self-join a postings frame on `keys` and count
+    * the keys each doc pair (id_a, id_b) shares into `shared`. A pair
+    * sharing k keys appears k times, so ONE groupBy both dedups the pair
+    * and yields the count; with `sizes`, each side's set size rides
+    * along as `n_a`/`n_b`. No arrays pass through the aggregate (an
+    * array buffer would demote it to a SortAggregate). */
+  private[queries] def postingPairCounts(
+      post: DataFrame, keys: Seq[String], shared: String,
+      sizes: Option[String] = None): DataFrame = {
+    val aggs = sizes.toSeq.flatMap(n =>
+      Seq(first(col(s"a.$n")).as("n_a"), first(col(s"b.$n")).as("n_b"))) :+
+      count(lit(1)).as(shared)
+    post.as("a")
+      .join(post.as("b"), pairOn(keys))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Jaccard of a counted pair: |A∩B| = `i`, |A∪B| = n_a + n_b − i. */
+  private def countJaccard: Column = expr("cast(i as double) / (n_a + n_b - i)")
+
+  /** Distinct blocked pairs (id_a, id_b): self-join on the blocking
+    * `keys`, then DISTINCT — a pair that collides on several keys
+    * surfaces once per key. `carry` = (column, stem) rides along per
+    * side as `<stem>_a`/`<stem>_b`. */
+  private[queries] def blockedPairs(
+      post: DataFrame, keys: Seq[String],
+      carry: Option[(String, String)] = None): DataFrame = {
+    def side(t: String, id: String) = col(s"$t.doc_id").as(id) +:
+      carry.toSeq.map { case (c, stem) => col(s"$t.$c").as(s"${stem}_$t") }
+    post.as("a")
+      .join(post.as("b"), pairOn(keys))
+      .select(side("a", "id_a") ++ side("b", "id_b"): _*)
+      .distinct()
+  }
+
+  /** Joins each candidate pair's full shingle sets back on as
+    * `sh_a`/`sh_b` (`sh`: doc_id, shingles). */
+  private def withShingleSets(cand: DataFrame, sh: DataFrame): DataFrame =
+    cand
+      .join(sh.select(col("doc_id"), col("shingles").as("sh_a")), col("doc_id") === col("id_a"))
+      .drop("doc_id")
+      .join(sh.select(col("doc_id"), col("shingles").as("sh_b")), col("doc_id") === col("id_b"))
+      .drop("doc_id")
+
+  /** Exact full-set Jaccard over the joined-back `sh_a`/`sh_b`. */
+  private def setJaccard: Column =
+    expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))")
+
+  /** The set-Jaccard verify: candidates (id_a, id_b) whose full shingle
+    * sets reach `minJaccard`, as (id_a, id_b, jaccard). */
+  private def setJaccardPairs(
+      cand: DataFrame, sh: DataFrame, minJaccard: Double): DataFrame =
+    withShingleSets(cand, sh)
+      .select(col("id_a"), col("id_b"), setJaccard.as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
+
+  /** Hamming-probe pairs over a probe frame (`hash`, probe `keys`,
+    * payload): self-join on the keys between DISTINCT hashes, name the
+    * two hashes `pair` = (probing side, other side), carry each
+    * `carry` = (column, name) from the other side, and keep the pairs
+    * within `radius` bits — each hash pair once. Two ways of keeping it
+    * once, as each site measured: `canonicalB = None` is a DISTINCT
+    * exchange (the hamming-ball probes, where a near pair shares exactly
+    * two keys); `Some(b)` keeps only the row of the pair's canonical
+    * block mask among the C(b,5) masks ([[simhashBlocksB]]) — a per-row
+    * filter, so the duplicates drop map-side (r21, measured 111,584 →
+    * 9,224 shuffle rows at sf0.1; SimhashBlocksSpec pins set identity). */
+  private[queries] def hammingProbePairs(
+      probes: DataFrame, hash: String, pair: (String, String), keys: Seq[String],
+      carry: Seq[(String, String)], radius: Int,
+      canonicalB: Option[Int]): DataFrame = {
+    val (ha, hb) = pair
+    val on = (keys.map(k => s"a.$k = b.$k") :+ s"a.$hash != b.$hash").mkString(" and ")
+    val joined = probes.as("a").join(probes.as("b"), expr(on))
+    val out = Seq(col(s"a.$hash").as(ha), col(s"b.$hash").as(hb)) ++
+      carry.map { case (c, n) => col(s"b.$c").as(n) }
+    val within = expr(s"bit_count($ha ^ $hb) <= $radius")
+    canonicalB match {
+      case None => joined.select(out: _*).distinct().filter(within)
+      case Some(bB) =>
+        // hamming-verify map-side (r20), then the canonical mask's row
+        joined.select(out :+ col("a.mask").as("mask"): _*)
+          .filter(within)
+          .filter(expr(s"mask = canonical_block_mask($ha ^ $hb, $bB)"))
+          .select((Seq(ha, hb) ++ carry.map(_._2)).map(col): _*)
+    }
+  }
+
+  /** Near-hash groups: items (`hash`, `id`) collapse exactly on the
+    * hash (group rep `rep` = lowest id), then merge with every other
+    * hash within `radius` bits through [[hammingProbePairs]] over
+    * `probe(groups)` (the other side's hash named `other`). One row per
+    * hash: (hash, group_size, rep, n_near_hashes, near_<rep> = the
+    * lowest rep across the hash and its near hashes). Every frame
+    * downstream of the groups is bounded by the distinct-hash
+    * vocabulary. */
+  private[queries] def nearHashGroups(
+      items: DataFrame, hash: String, id: String, rep: String, other: String,
+      probe: DataFrame => DataFrame, keys: Seq[String], radius: Int,
+      canonicalB: Option[Int]): DataFrame = {
+    val groups = items.groupBy(col(hash))
+      .agg(count(lit(1)).as("group_size"), min(col(id)).as(rep))
+    val cand = hammingProbePairs(probe(groups), hash, hash -> other, keys,
+      Seq(rep -> "nrep"), radius, canonicalB)
+    val near = cand.groupBy(col(hash))
+      .agg(count(lit(1)).as("n_near_hashes"), min(col("nrep")).as("near_min"))
+    groups.join(near, Seq(hash), "left")
+      .select(col(hash), col("group_size"), col(rep),
+        coalesce(col("n_near_hashes"), lit(0L)).as("n_near_hashes"),
+        least(col(rep), coalesce(col("near_min"), col(rep))).as(s"near_$rep"))
+  }
+
+  /** (doc_id, fp) once per document: the unit set the cross-doc
+    * frequency counts, so a unit repeated within one doc counts once. */
+  private def docUnits(fps: DataFrame): DataFrame =
+    fps.select(col("doc_id"), col("fp")).distinct()
+
+  /** Cross-doc frequency (fp, `as`): how many distinct documents hold
+    * each unit fingerprint — one HashAggregate, no lists. */
+  private def docFreq(fps: DataFrame, as: String): DataFrame =
+    docUnits(fps).groupBy(col("fp")).agg(count(lit(1)).as(as))
+
+  /** The units of `fps` whose fingerprint occurs in ≥ 2 distinct
+    * documents, with that frequency as column `as`. */
+  private def crossDocUnits(fps: DataFrame, as: String = "dfc"): DataFrame =
+    fps.join(docFreq(fps, as).filter(col(as) >= 2), Seq("fp"))
+
+  /** The remediated corpus: cut every flagged unit out of the `arr`
+    * column of `docs` (doc_id, arr). `flagged` (doc_id, `pos`) holds
+    * 1-based starts, each covering `width` elements — an ordinal cut is
+    * width 1. The starts collect into one small per-doc array `list`
+    * (a list aggregate over the FLAGGED subset only, never the corpus
+    * stream); the cut is a pure indexed-HOF map stage, and the kept
+    * elements, re-joined with the SQL separator `sep`, surface as a
+    * cross-engine hash so the whole transform sits under the gate. */
+  private def cutFlagged(
+      docs: DataFrame, arr: String, flagged: DataFrame, pos: String, list: String,
+      width: Int, sep: String): DataFrame = {
+    val perDoc = flagged.groupBy(col("doc_id").as("p_doc"))
+      .agg(collect_list(col(pos)).as(list))
+    docs
+      .join(perDoc, col("doc_id") === col("p_doc"), "left")
+      .select(col("doc_id"), col(arr),
+        // Spark HOF filter index is 0-based; the starts are 1-based
+        expr(s"""case when $list is null then $arr
+                |else filter($arr, (x, idx) ->
+                |  not exists($list, s -> idx + 1 >= s and idx + 1 < s + $width)) end"""
+          .stripMargin).as("kept"))
+      .select(col("doc_id"),
+        expr(s"cast(size($arr) as bigint)").as("n_before"),
+        expr("cast(size(kept) as bigint)").as("n_after"),
+        expr(h(s"concat_ws($sep, kept)")).as("remediated_fp"))
+  }
+
   /** n-gram Jaccard similarity pairs via an inverted index on shingle
     * hashes, with an optional hot-shingle cap (SURVEY §8.4).
     *
@@ -79,33 +271,9 @@ object Dedup {
     *    measured either way at sf0.1), so without the cache the
     *    shingle construction runs once per join side — cached wins
     *    warm 1.15s vs 1.85s at sf0.1. Materialization sites release
-    *    via `CacheScope.releaseAll()`. */
-  /** The (doc_id, lang, shingles) frame every word-3-gram kernel starts
-    * from — ONE definition so the pairing rules of the whole dedup
-    * family (jaccard, capped, clusters, incremental, recall truth)
-    * cannot silently drift apart. */
-  private[graft] def shingleFrame(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), expr(tokens).as("w"))
-      .filter(expr("size(w) >= 3"))
-      .select(col("doc_id"), col("lang"), expr(shingles).as("shingles"))
-
-  /** Exploded inverted-index postings (doc_id, lang, n_sh, v). The join
-    * key is xxhash64 of the exploded shingle — a flat codegen'd
-    * expression (HOF-embedded hashes run interpreted), and the 8-byte
-    * key shuffles cheaper than the shingle strings. Distinct shingles
-    * map 1:1 to distinct hashes (64-bit, ~collision-free). */
-  private[queries] def postingsOf(
-      sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    sh
-      .select(
-        col("doc_id"), col("lang"), expr("size(shingles)").as("n_sh"),
-        explode(col("shingles")).as("s"))
-      .select(col("doc_id"), col("lang"), col("n_sh"), xxhash64(col("s")).as("v"))
-
-  /** `blockByLang = false` collapses the language blocking to a single
+    *    via `CacheScope.releaseAll()`.
+    *
+    * `blockByLang = false` collapses the language blocking to a single
     * block (postings keyed on the shingle hash alone) — the pairing
     * rule of the minhash pipeline and of the recall harness's ground
     * truth, which must be able to pair across languages. Implemented
@@ -122,15 +290,8 @@ object Dedup {
     val exB = postingsOf(sh)
     val ex = if (blockByLang) exB else exB.withColumn("lang", lit(""))
     if (maxDf <= 0) {
-      ex.as("a")
-        .join(ex.as("b"), expr("a.v = b.v and a.lang = b.lang and a.doc_id < b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(
-          first(col("a.n_sh")).as("n_a"), first(col("b.n_sh")).as("n_b"),
-          count(lit(1)).as("i"))
-        .select(
-          col("id_a"), col("id_b"),
-          expr("cast(i as double) / (n_a + n_b - i)").as("jaccard"))
+      postingPairCounts(ex, Seq("v", "lang"), "i", sizes = Some("n_sh"))
+        .select(col("id_a"), col("id_b"), countJaccard.as("jaccard"))
         .filter(col("jaccard") >= minJaccard)
     } else {
       // hot-shingle cap, all-Tungsten, four stages. ONE count aggregate
@@ -177,19 +338,12 @@ object Dedup {
         .agg(collect_list(col("v")).as("hot_arr"), first(col("n_sh")).as("h_n"),
           first(col("lang")).as("h_lang"))
       // kept candidate self-join: every postings list on the join key
-      // is bounded at maxDf rows (≤ maxDf² fan-out per key); a pair
-      // sharing k kept shingles appears k times, so ONE groupBy both
-      // dedups the pair and yields i_kept = |kept shingles shared|,
-      // with the full set sizes riding along. No arrays pass through
-      // this aggregate: array-typed agg buffers would demote it from
-      // HashAggregate to a SortAggregate over the whole pair stream.
+      // is bounded at maxDf rows (≤ maxDf² fan-out per key); the pair
+      // count is i_kept = |kept shingles shared|, with the full set
+      // sizes riding along
       val keptPost = ex.join(keptV, Seq("lang", "v"))
         .select(col("doc_id"), col("lang"), col("v"), col("n_sh"))
-      val pairs = keptPost.as("a")
-        .join(keptPost.as("b"), expr("a.v = b.v and a.lang = b.lang and a.doc_id < b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(first(col("a.n_sh")).as("n_a"), first(col("b.n_sh")).as("n_b"),
-          count(lit(1)).as("i_kept"))
+      val pairs = postingPairCounts(keptPost, Seq("v", "lang"), "i_kept", sizes = Some("n_sh"))
       // hot sets attach per pair END, after the aggregate — two joins
       // against the per-doc frame (AQE broadcasts it at small scale;
       // at 100 TB both are high-cardinality id equi-joins)
@@ -206,8 +360,7 @@ object Dedup {
           // fires and the count goes off by one for hotless docs
           expr("i_kept + size(array_intersect(coalesce(hot_a, array()), coalesce(hot_b, array())))").as("i"),
           col("n_a"), col("n_b"))
-        .select(col("id_a"), col("id_b"),
-          expr("cast(i as double) / (n_a + n_b - i)").as("jaccard"))
+        .select(col("id_a"), col("id_b"), countJaccard.as("jaccard"))
         .filter(col("jaccard") >= minJaccard)
       // CAP ESCAPE (ADVICE r10): the kept path can only find a pair
       // that shares at least one 2 ≤ df ≤ maxDf shingle — a cluster of
@@ -243,8 +396,7 @@ object Dedup {
         .select(col("a.h_doc").as("id_a"), col("b.h_doc").as("id_b"),
           expr("size(array_intersect(a.hot_arr, b.hot_arr))").as("i"),
           col("a.h_n").as("n_a"), col("b.h_n").as("n_b"))
-        .select(col("id_a"), col("id_b"),
-          expr("cast(i as double) / (n_a + n_b - i)").as("jaccard"))
+        .select(col("id_a"), col("id_b"), countJaccard.as("jaccard"))
         .filter(col("jaccard") >= minJaccard)
       main.unionByName(escape)
         .groupBy(col("id_a"), col("id_b"))
@@ -252,16 +404,6 @@ object Dedup {
     }
   }
 
-  /** Prefix-filtered Jaccard pairs (q_dedup_prefix_join's kernel,
-    * separated so PrefixFilterSpec can drive it at any threshold).
-    * Candidate generation touches only each doc's (n − ⌈θn⌉ + 1)-prefix
-    * under the global (df asc, hash asc) order — recall GUARANTEED by
-    * the prefix-filter theorem for any total order — then the exact
-    * full-set verify. Posting keys use [[graft.functions.CrossHash]]
-    * (not xxhash64) because the ORDER itself must mirror cross-engine,
-    * not just equality. θ must satisfy ⌈θn⌉ == (n+1) div 2, i.e. this
-    * kernel is specialized to θ = 0.5 prefixes; the verify threshold
-    * `minJaccard` ≥ 0.5 stays exact for any such value. */
   /** The prefix postings frame (doc_id, lang, v) — each doc's
     * (n − ⌈n/2⌉ + 1) rarest shingle hashes under the (df asc, hash asc)
     * global order. Exposed so PrefixFilterSpec can count the ACTUAL
@@ -284,6 +426,16 @@ object Dedup {
       .select(col("doc_id"), col("lang"), col("v"))
   }
 
+  /** Prefix-filtered Jaccard pairs (q_dedup_prefix_join's kernel,
+    * separated so PrefixFilterSpec can drive it at any threshold).
+    * Candidate generation touches only each doc's (n − ⌈θn⌉ + 1)-prefix
+    * under the global (df asc, hash asc) order — recall GUARANTEED by
+    * the prefix-filter theorem for any total order — then the exact
+    * full-set verify. Posting keys use [[graft.functions.CrossHash]]
+    * (not xxhash64) because the ORDER itself must mirror cross-engine,
+    * not just equality. θ must satisfy ⌈θn⌉ == (n+1) div 2, i.e. this
+    * kernel is specialized to θ = 0.5 prefixes; the verify threshold
+    * `minJaccard` ≥ 0.5 stays exact for any such value. */
   def prefixJoinPairs(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -298,21 +450,7 @@ object Dedup {
     // that (measured at sf0.1: uncached 5.44s cold / 3.00s warm vs
     // persistScoped 6.46s / 3.29s)
     val sh = shingleFrame(s, dir)
-    val pre = prefixPostings(sh)
-    val cand = pre.as("a")
-      .join(pre.as("b"), expr("a.v = b.v and a.lang = b.lang and a.doc_id < b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(sh.select(col("doc_id"), col("shingles").as("sh_a")), col("doc_id") === col("id_a"))
-      .drop("doc_id")
-      .join(sh.select(col("doc_id"), col("shingles").as("sh_b")), col("doc_id") === col("id_b"))
-      .drop("doc_id")
-      .select(
-        col("id_a"), col("id_b"),
-        expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))")
-          .as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    setJaccardPairs(blockedPairs(prefixPostings(sh), Seq("v", "lang")), sh, minJaccard)
   }
 
   /** Substring-fingerprint window parameters (SURVEY §8.3): 30-token
@@ -335,6 +473,23 @@ object Dedup {
         explode(expr(s"sequence(1, size(w) - ${SUB_W - 1}, $SUB_STRIDE)")).as("i"))
       .select(col("doc_id"), col("i"),
         expr(h(s"concat_ws(' ', slice(w, i, $SUB_W))")).as("fp"))
+
+  /** Shared DuckDB CTE block mirroring [[windowFps]] at `stride`:
+    * `tok`, the positioned windows `winp(doc_id, i, fp)` and each doc's
+    * window set `win(doc_id, fp)` — one text for every span-family
+    * oracle, so the window rule cannot drift between them (the
+    * [[duckLineCtes]] pattern). */
+  private def duckWinCtes(stride: Int = SUB_STRIDE): String =
+    raw"""tok AS (
+      |  SELECT doc_id, $duckTokens AS w FROM documents
+      |), winp AS (
+      |  SELECT doc_id, i,
+      |    ${duck(s"array_to_string(w[i:i+${SUB_W - 1}], ' ')")} AS fp
+      |  FROM tok, unnest(generate_series(1, len(w) - ${SUB_W - 1}, $stride)) AS t(i)
+      |  WHERE len(w) >= $SUB_W
+      |), win AS (
+      |  SELECT DISTINCT doc_id, fp FROM winp
+      |)""".stripMargin
 
   /** Line width for the cross-document LINE-level exact dedup
     * (RefinedWeb/Falcon-style, the last text granularity below doc and
@@ -530,10 +685,6 @@ object Dedup {
       .filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id").as("loser_id"))
 
-  /** Losers of the MinHash-LSH near-dup stage: the HIGHER doc_id of
-    * every banded candidate pair whose full-set Jaccard >= 0.5 — the
-    * q_dedup_minhash_lsh pipeline ending in one distinct id column
-    * `id_b`. Shared by q_dedup_survivors and q_corpus_funnel. */
   /** The MinHash candidate pipeline shared by every consumer — the
     * Spark twin of [[minhashCandCtes]], stated ONCE (a seed, band-count
     * or band-key change edits one place on each side): string shingle
@@ -566,19 +717,8 @@ object Dedup {
     val bands = sigs
       .select(col("doc_id"), explode(expr(s"array($bandStructs)")).as("band"))
       .select(col("doc_id"), col("band.b").as("b"), col("band.bk").as("bk"))
-    val cand = bands.as("a")
-      .join(bands.as("c"), expr("a.b = c.b and a.bk = c.bk and a.doc_id < c.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("c.doc_id").as("id_b"))
-      .distinct()
-    (sh, sigs, cand)
+    (sh, sigs, blockedPairs(bands, Seq("b", "bk")))
   }
-
-  private def memoKernel(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      kernel: String, rebuildMemo: Boolean)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, kernel)(build)
-    else graft.io.KernelMemo.reuse(s, dir, kernel)(build)
 
   /** Verified MinHash-LSH near-dup pairs (id_a, id_b, jaccard >= 0.5) —
     * the q_dedup_minhash_lsh output, memoized through
@@ -591,23 +731,11 @@ object Dedup {
   private[graft] def minhashPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
-    memoKernel(s, dir, "minhash_pairs", rebuildMemo) {
+    graft.io.KernelMemo(s, dir, "minhash_pairs", rebuildMemo) {
       val (sh, _, cand) = minhashCandidates(s, dir)
-      cand
-        .join(sh.select(col("doc_id"), col("shingles").as("sh_a")), col("doc_id") === col("id_a"))
-        .drop("doc_id")
-        .join(sh.select(col("doc_id"), col("shingles").as("sh_b")), col("doc_id") === col("id_b"))
-        .drop("doc_id")
-        .select(
-          col("id_a"), col("id_b"),
-          expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))")
-            .as("jaccard"))
-        .filter(col("jaccard") >= 0.5)
+      setJaccardPairs(cand, sh, 0.5)
     }
 
-  /** Band-blocked SimHash near-dup pairs (id_a, id_b, hamming <= 5) —
-    * the q_dedup_simhash output under the same memo protocol (builder:
-    * the registered query; reuser: the recall harness). */
   /** The (doc_id, simhash) signature frame — explode + ONE typed
     * imperative aggregate ([[graft.functions.SimHashAgg]]); shared by
     * the band-blocked kernel and the block-combination kernel so the
@@ -640,16 +768,10 @@ object Dedup {
   /** Band-geometry pair kernel (the heuristic arm of the switch). */
   private[graft] def simhashPairsBands(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val sim = simhashFrame(s, dir)
-    val bands = sim
+    val bands = simhashFrame(s, dir)
       .select(col("doc_id"), col("simhash"), explode(expr("sequence(0, 3)")).as("b"))
       .withColumn("bk", expr("shiftright(simhash, b*15) & 32767"))
-    bands.as("a")
-      .join(bands.as("c"), expr("a.b = c.b and a.bk = c.bk and a.doc_id < c.doc_id"))
-      .select(
-        col("a.doc_id").as("id_a"), col("a.simhash").as("sim_a"),
-        col("c.doc_id").as("id_b"), col("c.simhash").as("sim_b"))
-      .distinct()
+    blockedPairs(bands, Seq("b", "bk"), carry = Some("simhash" -> "sim"))
       .filter(expr("bit_count(sim_a ^ sim_b) <= 5"))
       .select(col("id_a"), col("id_b"), expr("cast(bit_count(sim_a ^ sim_b) as int)").as("hamming"))
   }
@@ -672,23 +794,12 @@ object Dedup {
     val probes = sigs.select(col("simhash")).distinct()
       .crossJoin(broadcast(masksDf))
       .select(col("simhash"), col("mask"), expr("simhash & mask").as("bkey"))
-    val sigPairs = probes.as("a")
-      .join(probes.as("b"),
-        expr("a.mask = b.mask and a.bkey = b.bkey and a.simhash != b.simhash"))
-      .select(col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"),
-        col("a.mask").as("mask"))
-      // hamming-verify map-side (r20), then count each colliding pair
-      // ONCE by keeping only its canonical mask's row (r21, VERDICT
-      // r20 #6): a close pair collides on C(B−d,5−d) masks (126 at
-      // d = 1) and r20 collapsed the duplicates through a pair-dedup
-      // DISTINCT exchange; the canonical filter is per-row, so the
-      // multiplicity drops map-side and the exchange is gone —
-      // measured 111,584 → 9,224 rows at the sf0.1 shuffle boundary,
-      // set-identical by construction (every join row's mask is one
-      // of the pair's colliding masks; SimhashBlocksSpec pins it)
-      .filter(expr("bit_count(sig_a ^ sig_b) <= 5"))
-      .filter(expr(s"mask = canonical_block_mask(sig_a ^ sig_b, $bB)"))
-      .select(col("sig_a"), col("sig_b"))
+    // a close pair collides on C(B−d,5−d) masks (126 at d = 1): the
+    // canonical-mask filter counts it once, map-side (set-identical by
+    // construction — every join row's mask is one of the pair's
+    // colliding masks)
+    val sigPairs = hammingProbePairs(probes, "simhash", "sig_a" -> "sig_b",
+      Seq("mask", "bkey"), carry = Nil, radius = 5, canonicalB = Some(bB))
     // directed signature pairs + id_a < id_b keep each doc pair once
     val cross = sigPairs
       .join(sigs.select(col("doc_id").as("id_a"), col("simhash").as("sig_a")), "sig_a")
@@ -703,10 +814,14 @@ object Dedup {
     cross.unionByName(intra)
   }
 
+  /** SimHash near-dup pairs (id_a, id_b, hamming <= 5) through the
+    * geometry switch ([[SimhashBandsMaxN]]) — the q_dedup_simhash
+    * output under the same memo protocol (builder: the registered
+    * query; reuser: the recall harness). */
   private[graft] def simhashPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
-    memoKernel(s, dir, "simhash_pairs", rebuildMemo) {
+    graft.io.KernelMemo(s, dir, "simhash_pairs", rebuildMemo) {
       if (Tables.rowCount(s, dir, "documents") <= SimhashBandsMaxN)
         simhashPairsBands(s, dir)
       else simhashPairsBlocksJoin(s, dir)
@@ -719,7 +834,7 @@ object Dedup {
   private[graft] def ngramPairs03(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
-    memoKernel(s, dir, "ngram_pairs_03", rebuildMemo) {
+    graft.io.KernelMemo(s, dir, "ngram_pairs_03", rebuildMemo) {
       ngramJaccardPairs(s, dir, minJaccard = 0.3)
     }
 
@@ -729,7 +844,7 @@ object Dedup {
   private[graft] def cappedPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
-    memoKernel(s, dir, "ngram_capped_pairs", rebuildMemo) {
+    graft.io.KernelMemo(s, dir, "ngram_capped_pairs", rebuildMemo) {
       ngramJaccardPairs(s, dir, minJaccard = 0.3, maxDf = 4)
     }
 
@@ -740,26 +855,26 @@ object Dedup {
   private[graft] def minhashEstimates(
       s: org.apache.spark.sql.SparkSession, dir: String,
       rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
-    memoKernel(s, dir, "minhash_estimates", rebuildMemo) {
+    graft.io.KernelMemo(s, dir, "minhash_estimates", rebuildMemo) {
       val (sh, sigs, cand) = minhashCandidates(s, dir)
-      cand
+      val withSigs = cand
         .join(sigs.select(col("doc_id"), col("sig").as("sig_a")),
           col("doc_id") === col("id_a")).drop("doc_id")
         .join(sigs.select(col("doc_id"), col("sig").as("sig_b")),
           col("doc_id") === col("id_b")).drop("doc_id")
-        .join(sh.select(col("doc_id"), col("shingles").as("sh_a")),
-          col("doc_id") === col("id_a")).drop("doc_id")
-        .join(sh.select(col("doc_id"), col("shingles").as("sh_b")),
-          col("doc_id") === col("id_b")).drop("doc_id")
+      withShingleSets(withSigs, sh)
         .select(col("id_a"), col("id_b"),
           expr("""cast(aggregate(sequence(1, 16), 0,
             (acc, i) -> acc + if(element_at(sig_a, i) = element_at(sig_b, i), 1, 0))
             as double) / 16""").as("est_jaccard"),
-          expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))")
-            .as("exact_jaccard"))
+          setJaccard.as("exact_jaccard"))
         .withColumn("abs_err", abs(col("est_jaccard") - col("exact_jaccard")))
     }
 
+  /** Losers of the MinHash-LSH near-dup stage: the HIGHER doc_id of
+    * every banded candidate pair whose full-set Jaccard >= 0.5 — the
+    * q_dedup_minhash_lsh pipeline ending in one distinct id column
+    * `id_b`. Shared by q_dedup_survivors and q_corpus_funnel. */
   private[graft] def lshNearDupLosers(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     minhashPairs(s, dir, rebuildMemo = false).select(col("id_b")).distinct()
@@ -866,9 +981,8 @@ object Dedup {
   private def clustersFrame(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
-      reuse: Boolean = false): org.apache.spark.sql.DataFrame =
-    if (reuse) graft.io.KernelMemo.reuse(s, dir, "cc_clusters")(buildClusters(s, dir))
-    else graft.io.KernelMemo.rebuild(s, dir, "cc_clusters")(buildClusters(s, dir))
+      rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
+    graft.io.KernelMemo(s, dir, "cc_clusters", rebuildMemo)(buildClusters(s, dir))
 
   private def buildClusters(
       s: org.apache.spark.sql.SparkSession,
@@ -888,11 +1002,12 @@ object Dedup {
         .select(col("doc_id"), col("label").as("cluster_id"), col("n_members"))
   }
 
-  /** q_dedup_clusters oracle, shared verbatim with
-    * `q_dedup_cluster_sizes` (which embeds it as a derived table — one
-    * formulation, no drift). */
-  private[queries] val clustersOracle: String =
-    raw"""WITH RECURSIVE sh AS (
+  /** DuckDB twin of [[postingPairCounts]] over the lang-blocked
+    * shingle postings: `sh`, `ex` and the per-pair shared-shingle count
+    * `inter(id_a, id_b, n_a, n_b, i)` — one text for the uncapped
+    * Jaccard, containment and clusters oracles. */
+  private val duckInterCtes: String =
+    raw"""sh AS (
       |  SELECT doc_id, lang, $duckShingles AS shingles
       |  FROM (SELECT doc_id, lang, $duckTokens AS w FROM documents) WHERE len(w) >= 3
       |), ex AS (
@@ -902,7 +1017,13 @@ object Dedup {
       |    any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b, count(*) AS i
       |  FROM ex a JOIN ex b ON a.v = b.v AND a.lang = b.lang AND a.doc_id < b.doc_id
       |  GROUP BY a.doc_id, b.doc_id
-      |), pairs AS (
+      |)""".stripMargin
+
+  /** q_dedup_clusters oracle, shared verbatim with
+    * `q_dedup_cluster_sizes` (which embeds it as a derived table — one
+    * formulation, no drift). */
+  private[queries] val clustersOracle: String =
+    raw"""WITH RECURSIVE $duckInterCtes, pairs AS (
       |  SELECT id_a, id_b FROM inter WHERE CAST(i AS DOUBLE) / (n_a + n_b - i) >= 0.3
       |), edges AS (
       |  SELECT id_a AS src, id_b AS dst FROM pairs
@@ -1438,35 +1559,14 @@ object Dedup {
         import s.implicits._
         simhashBlockMasks(bB).toDF("mask")
       }
-      val groups = simhashFrame(s, dir)
-        .groupBy(col("simhash"))
-        .agg(count(lit(1)).as("group_size"), min(col("doc_id")).as("rep_id"))
-      val probes = groups
-        .crossJoin(broadcast(masksDf))
-        .select(col("simhash"), col("rep_id"), col("mask"),
-          expr("simhash & mask").as("bkey"))
       // both self-join sides shuffle on the same (mask, bkey) over the
       // same subtree: AQE ReuseExchange serves them from one shuffle
-      // write (the ball-probe shape; uncached by the capped-dedup rule)
-      val cand = probes.as("a")
-        .join(probes.as("b"),
-          expr("a.mask = b.mask and a.bkey = b.bkey and a.simhash != b.simhash"))
-        .select(col("a.simhash").as("simhash"),
-          col("b.simhash").as("sim_b"), col("b.rep_id").as("nrep"),
-          col("a.mask").as("mask"))
-        // r20: hamming-verify before the dedup exchange; r21: count
-        // each colliding pair once via its canonical mask's row (the
-        // simhashPairsBlocksJoin rule) — the multi-mask duplicates
-        // drop MAP-SIDE and the pair-dedup distinct exchange is gone
-        .filter(expr("bit_count(simhash ^ sim_b) <= 5"))
-        .filter(expr(s"mask = canonical_block_mask(simhash ^ sim_b, $bB)"))
-        .select(col("simhash"), col("sim_b"), col("nrep"))
-      val near = cand.groupBy(col("simhash"))
-        .agg(count(lit(1)).as("n_near_hashes"), min(col("nrep")).as("near_min"))
-      groups.join(near, Seq("simhash"), "left")
-        .select(col("simhash"), col("group_size"), col("rep_id"),
-          coalesce(col("n_near_hashes"), lit(0L)).as("n_near_hashes"),
-          least(col("rep_id"), coalesce(col("near_min"), col("rep_id"))).as("near_rep_id"))
+      // write (the ball-probe shape; uncached by the capped-dedup rule);
+      // each colliding pair counts once via its canonical mask's row
+      nearHashGroups(simhashFrame(s, dir), "simhash", "doc_id", "rep_id", "sim_b",
+        probe = _.crossJoin(broadcast(masksDf))
+          .select(col("simhash"), col("rep_id"), col("mask"), expr("simhash & mask").as("bkey")),
+        keys = Seq("mask", "bkey"), radius = 5, canonicalB = Some(bB))
     },
 
     // ---- n-gram Jaccard set-similarity join (inverted index) ---------------
@@ -1479,17 +1579,7 @@ object Dedup {
     // the formulation that survives 100 TB. Oracle mirrors it 1:1.
     Q(
       "q_dedup_ngram_jaccard",
-      raw"""WITH sh AS (
-        |  SELECT doc_id, lang, $duckShingles AS shingles
-        |  FROM (SELECT doc_id, lang, $duckTokens AS w FROM documents) WHERE len(w) >= 3
-        |), ex AS (
-        |  SELECT doc_id, lang, len(shingles) AS n_sh, unnest(shingles) AS v FROM sh
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b, count(*) AS i
-        |  FROM ex a JOIN ex b ON a.v = b.v AND a.lang = b.lang AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |)
+      raw"""WITH $duckInterCtes
         |SELECT id_a, id_b, CAST(i AS DOUBLE) / (n_a + n_b - i) AS jaccard
         |FROM inter WHERE CAST(i AS DOUBLE) / (n_a + n_b - i) >= 0.3""") { (s, dir) =>
       // Uncapped single-pass formulation (oracle mirrors it 1:1); the
@@ -1598,29 +1688,14 @@ object Dedup {
     // int/int division, deterministic cross-engine.
     Q(
       "q_dedup_containment",
-      raw"""WITH sh AS (
-        |  SELECT doc_id, lang, $duckShingles AS shingles
-        |  FROM (SELECT doc_id, lang, $duckTokens AS w FROM documents) WHERE len(w) >= 3
-        |), ex AS (
-        |  SELECT doc_id, lang, len(shingles) AS n_sh, unnest(shingles) AS v FROM sh
-        |), inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b, count(*) AS i
-        |  FROM ex a JOIN ex b ON a.v = b.v AND a.lang = b.lang AND a.doc_id < b.doc_id
-        |  GROUP BY a.doc_id, b.doc_id
-        |)
+      raw"""WITH $duckInterCtes
         |SELECT id_a, id_b,
         |  CAST(i AS DOUBLE) / least(n_a, n_b) AS containment,
         |  CASE WHEN n_a <= n_b THEN id_a ELSE id_b END AS contained_id,
         |  i = least(n_a, n_b) AS full_subset
         |FROM inter WHERE CAST(i AS DOUBLE) / least(n_a, n_b) >= 0.6""") { (s, dir) =>
-      val ex = postingsOf(shingleFrame(s, dir).persistScoped())
-      ex.as("a")
-        .join(ex.as("b"), expr("a.v = b.v and a.lang = b.lang and a.doc_id < b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(
-          first(col("a.n_sh")).as("n_a"), first(col("b.n_sh")).as("n_b"),
-          count(lit(1)).as("i"))
+      postingPairCounts(postingsOf(shingleFrame(s, dir).persistScoped()),
+          Seq("v", "lang"), "i", sizes = Some("n_sh"))
         .select(
           col("id_a"), col("id_b"),
           expr("cast(i as double) / least(n_a, n_b)").as("containment"),
@@ -1699,14 +1774,7 @@ object Dedup {
     // count so a span repeated WITHIN one doc counts that doc once.
     Q(
       "q_dedup_substring",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), win AS (
-        |  SELECT DISTINCT doc_id,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 10)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), kept AS (
+      raw"""WITH ${duckWinCtes()}, kept AS (
         |  SELECT fp FROM win GROUP BY fp HAVING count(*) BETWEEN 2 AND 8
         |), post AS (
         |  SELECT doc_id, win.fp FROM win JOIN kept USING (fp)
@@ -1724,16 +1792,11 @@ object Dedup {
       // sf0.1) — the same flip as the capped ngram kernel. The
       // position-carrying winp diamonds below have no reusable
       // exchange, so THEY cache.
-      val wins = windowFps(s, dir).select(col("doc_id"), col("fp")).distinct()
-      val kept = wins.groupBy(col("fp"))
-        .agg(count(lit(1)).as("df"))
+      val fps = windowFps(s, dir)
+      val kept = docFreq(fps, "df")
         .filter(col("df").between(2, SUB_MAX_DF))
         .select(col("fp"))
-      val post = wins.join(kept, Seq("fp"))
-      post.as("a")
-        .join(post.as("b"), expr("a.fp = b.fp and a.doc_id < b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("shared_windows"))
+      postingPairCounts(docUnits(fps).join(kept, Seq("fp")), Seq("fp"), "shared_windows")
     },
 
     // ---- longest contiguous shared span per pair ---------------------------
@@ -1748,16 +1811,8 @@ object Dedup {
     // per-doc hot arrays.
     Q(
       "q_dedup_span_extent",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), winp AS (
-        |  SELECT doc_id, i,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 10)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), kept AS (
-        |  SELECT fp FROM (SELECT DISTINCT doc_id, fp FROM winp)
-        |  GROUP BY fp HAVING count(*) BETWEEN 2 AND 8
+      raw"""WITH ${duckWinCtes()}, kept AS (
+        |  SELECT fp FROM win GROUP BY fp HAVING count(*) BETWEEN 2 AND 8
         |), post AS (
         |  SELECT doc_id, i, winp.fp FROM winp JOIN kept USING (fp)
         |), matches AS (
@@ -1778,13 +1833,12 @@ object Dedup {
       import org.apache.spark.sql.expressions.Window
       val winp = windowFps(s, dir)
         .persistScoped() // feeds the cap count and both match sides
-      val kept = winp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("df"))
+      val kept = docFreq(winp, "df")
         .filter(col("df").between(2, SUB_MAX_DF))
         .select(col("fp"))
       val post = winp.join(kept, Seq("fp"))
       val matches = post.as("a")
-        .join(post.as("b"), expr("a.fp = b.fp and a.doc_id < b.doc_id"))
+        .join(post.as("b"), pairOn(Seq("fp")))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
           col("a.i").as("ia"), col("b.i").as("ib"))
       // islands: within one (pair, alignment) group, stride-consecutive
@@ -1811,14 +1865,7 @@ object Dedup {
     // arithmetic, bit-identical cross-engine.
     Q(
       "q_text_dup_fraction",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), win AS (
-        |  SELECT DISTINCT doc_id,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 10)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), df AS (
+      raw"""WITH ${duckWinCtes()}, df AS (
         |  SELECT fp, count(*) AS dfc FROM win GROUP BY fp
         |)
         |SELECT doc_id, count(*) AS n_windows,
@@ -1828,9 +1875,8 @@ object Dedup {
         |GROUP BY doc_id""") { (s, dir) =>
       // UNCACHED: same distinct-exchange diamond as q_dedup_substring
       // (measured there: AQE ReuseExchange beats the cache)
-      val wins = windowFps(s, dir).select(col("doc_id"), col("fp")).distinct()
-      val dfTab = wins.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      wins.join(dfTab, Seq("fp"))
+      val fps = windowFps(s, dir)
+      docUnits(fps).join(docFreq(fps, "dfc"), Seq("fp"))
         .groupBy(col("doc_id"))
         .agg(
           count(lit(1)).as("n_windows"),
@@ -1847,24 +1893,14 @@ object Dedup {
     // doc so within-doc repetition alone never flags a span.
     Q(
       "q_dedup_spans",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), winp AS (
-        |  SELECT doc_id, i AS win_start,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 10)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), df AS (
+      raw"""WITH ${duckWinCtes()}, df AS (
         |  SELECT fp, count(DISTINCT doc_id) AS dfc FROM winp GROUP BY fp
         |)
-        |SELECT doc_id, CAST(win_start AS BIGINT) AS win_start
+        |SELECT doc_id, CAST(i AS BIGINT) AS win_start
         |FROM winp JOIN df USING (fp) WHERE dfc >= 2""") { (s, dir) =>
       val winp = windowFps(s, dir)
         .persistScoped() // feeds the df count and the position join
-      val dfTab = winp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      winp.join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("i").cast("long").as("win_start"))
+      crossDocUnits(winp).select(col("doc_id"), col("i").cast("long").as("win_start"))
     },
 
     // ---- span removal: the remediated corpus -------------------------------
@@ -1879,17 +1915,10 @@ object Dedup {
     // cross-engine hash so the full transform sits under the gate.
     Q(
       "q_dedup_span_removal",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), winp AS (
-        |  SELECT doc_id, i AS win_start,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 10)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), df AS (
+      raw"""WITH ${duckWinCtes()}, df AS (
         |  SELECT fp, count(DISTINCT doc_id) AS dfc FROM winp GROUP BY fp
         |), spans AS (
-        |  SELECT doc_id, win_start FROM winp JOIN df USING (fp) WHERE dfc >= 2
+        |  SELECT doc_id, i AS win_start FROM winp JOIN df USING (fp) WHERE dfc >= 2
         |), perdoc AS (
         |  SELECT doc_id, list(win_start) AS starts FROM spans GROUP BY doc_id
         |), cut AS (
@@ -1905,27 +1934,9 @@ object Dedup {
         |FROM cut""") { (s, dir) =>
       val winp = windowFps(s, dir)
         .persistScoped() // feeds the df count and the span join
-      val dfTab = winp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val spans = winp
-        .join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("i"))
-      val perDoc = spans.groupBy(col("doc_id").as("p_doc"))
-        .agg(collect_list(col("i")).as("starts"))
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), expr(tokens).as("w"))
-        .join(perDoc, col("doc_id") === col("p_doc"), "left")
-        .select(col("doc_id"), col("w"),
-          // Spark HOF filter index is 0-based; the window starts are
-          // 1-based sequence positions — align with idx + 1
-          expr(s"""case when starts is null then w
-                  |else filter(w, (x, idx) ->
-                  |  not exists(starts, s -> idx + 1 >= s and idx + 1 < s + $SUB_W)) end"""
-            .stripMargin).as("kept"))
-        .select(col("doc_id"),
-          expr("cast(size(w) as bigint)").as("n_before"),
-          expr("cast(size(kept) as bigint)").as("n_after"),
-          expr(h("concat_ws(' ', kept)")).as("remediated_fp"))
+      cutFlagged(Tables(s, dir, "documents").select(col("doc_id"), expr(tokens).as("w")), "w",
+        crossDocUnits(winp).select(col("doc_id"), col("i")), "i", "starts",
+        width = SUB_W, sep = "' '")
     },
 
     // ---- EXACT substring dedup (suffix-array grade, VERDICT r16 #3) --------
@@ -1950,14 +1961,7 @@ object Dedup {
     // stride-10 approximation.
     Q(
       "q_dedup_substring_exact",
-      raw"""WITH tok AS (
-        |  SELECT doc_id, $duckTokens AS w FROM documents
-        |), winp AS (
-        |  SELECT doc_id, i,
-        |    ${duck("array_to_string(w[i:i+29], ' ')")} AS fp
-        |  FROM tok, unnest(generate_series(1, len(w) - 29, 1)) AS t(i)
-        |  WHERE len(w) >= 30
-        |), df AS (
+      raw"""WITH ${duckWinCtes(stride = 1)}, df AS (
         |  SELECT fp, count(DISTINCT doc_id) AS dfc FROM winp GROUP BY fp
         |), flagged AS (
         |  SELECT doc_id, i FROM winp JOIN df USING (fp) WHERE dfc >= 2
@@ -1982,12 +1986,7 @@ object Dedup {
           explode(expr(s"sequence(1, size(w) - ${SUB_W - 1}, 1)")).as("i"))
         .select(col("doc_id"), col("i"),
           expr(h(s"concat_ws(' ', slice(w, i, $SUB_W))")).as("fp"))
-      val dfTab = winp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val flagged = winp
-        .join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("i"))
-      flagged
+      crossDocUnits(winp).select(col("doc_id"), col("i"))
         .withColumn("g",
           col("i") - row_number().over(Window.partitionBy(col("doc_id")).orderBy(col("i"))))
         .groupBy(col("doc_id"), col("g"))
@@ -2016,9 +2015,7 @@ object Dedup {
         |FROM linep JOIN ldf USING (fp) WHERE dfc >= 2""") { (s, dir) =>
       val lp = lineFps(s, dir)
         .persistScoped() // feeds the df count and the position join-back
-      val dfTab = lp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      lp.join(dfTab.filter(col("df") >= 2), Seq("fp"))
+      crossDocUnits(lp, "df")
         .select(col("doc_id"), col("line_no"),
           col("i").cast("long").as("tok_start"), col("n_tok"), col("df"))
     },
@@ -2053,26 +2050,9 @@ object Dedup {
         |FROM cut""") { (s, dir) =>
       val lp = lineFps(s, dir)
         .persistScoped() // feeds the df count and the flagged join
-      val dfTab = lp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val flagged = lp
-        .join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("i"))
-      val perDoc = flagged.groupBy(col("doc_id").as("p_doc"))
-        .agg(collect_list(col("i")).as("starts"))
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), expr(tokens).as("w"))
-        .join(perDoc, col("doc_id") === col("p_doc"), "left")
-        .select(col("doc_id"), col("w"),
-          // Spark HOF filter index is 0-based; starts are 1-based
-          expr(s"""case when starts is null then w
-                  |else filter(w, (x, idx) ->
-                  |  not exists(starts, s -> idx + 1 >= s and idx + 1 < s + $LINE_W)) end"""
-            .stripMargin).as("kept"))
-        .select(col("doc_id"),
-          expr("cast(size(w) as bigint)").as("n_before"),
-          expr("cast(size(kept) as bigint)").as("n_after"),
-          expr(h("concat_ws(' ', kept)")).as("remediated_fp"))
+      cutFlagged(Tables(s, dir, "documents").select(col("doc_id"), expr(tokens).as("w")), "w",
+        crossDocUnits(lp).select(col("doc_id"), col("i")), "i", "starts",
+        width = LINE_W, sep = "' '")
     },
 
     // ---- newline-segmented line dedup (the REAL segmenter) -----------------
@@ -2092,9 +2072,7 @@ object Dedup {
         |FROM nlinep JOIN nldf USING (fp) WHERE dfc >= 2""") { (s, dir) =>
       val lp = nlLineFps(s, dir)
         .persistScoped() // feeds the df count and the join-back
-      val dfTab = lp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      lp.join(dfTab.filter(col("dfc") >= 2), Seq("fp"))
+      crossDocUnits(lp)
         .select(col("doc_id"), col("line_no"), col("n_tok"), col("dfc").as("df"))
     },
 
@@ -2130,24 +2108,8 @@ object Dedup {
         .persistScoped()
       val lp = nlLineFps(seg)
         .persistScoped() // feeds the df count and the flagged join
-      val dfTab = lp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val flagged = lp
-        .join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("line_no"))
-      val perDoc = flagged.groupBy(col("doc_id").as("p_doc"))
-        .agg(collect_list(col("line_no")).as("cut"))
-      seg
-        .join(perDoc, col("doc_id") === col("p_doc"), "left")
-        .select(col("doc_id"), col("lines"),
-          // Spark HOF filter index is 0-based; line ordinals 1-based
-          expr("""case when cut is null then lines
-                 |else filter(lines, (x, idx) ->
-                 |  not exists(cut, c -> c = idx + 1)) end""".stripMargin).as("kept"))
-        .select(col("doc_id"),
-          expr("cast(size(lines) as bigint)").as("n_before"),
-          expr("cast(size(kept) as bigint)").as("n_after"),
-          expr(h("concat_ws(chr(10), kept)")).as("remediated_fp"))
+      cutFlagged(seg, "lines", crossDocUnits(lp).select(col("doc_id"), col("line_no")),
+        "line_no", "cut", width = 1, sep = "chr(10)")
     },
 
     // ---- paragraph dedup (blank-line segmenter, round 19) ------------------
@@ -2163,9 +2125,7 @@ object Dedup {
         |FROM parap JOIN padf USING (fp) WHERE dfc >= 2""") { (s, dir) =>
       val pp = paraFps(s, dir)
         .persistScoped() // feeds the df count and the join-back
-      val dfTab = pp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      pp.join(dfTab.filter(col("dfc") >= 2), Seq("fp"))
+      crossDocUnits(pp)
         .select(col("doc_id"), col("para_no"), col("n_tok"), col("dfc").as("df"))
     },
 
@@ -2199,24 +2159,8 @@ object Dedup {
         .persistScoped()
       val pp = paraFps(seg)
         .persistScoped() // feeds the df count and the flagged join
-      val dfTab = pp.select(col("doc_id"), col("fp")).distinct()
-        .groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-      val flagged = pp
-        .join(dfTab.filter(col("dfc") >= 2).select(col("fp")), Seq("fp"))
-        .select(col("doc_id"), col("para_no"))
-      val perDoc = flagged.groupBy(col("doc_id").as("p_doc"))
-        .agg(collect_list(col("para_no")).as("cut"))
-      seg
-        .join(perDoc, col("doc_id") === col("p_doc"), "left")
-        .select(col("doc_id"), col("paras"),
-          // Spark HOF filter index is 0-based; paragraph ordinals 1-based
-          expr("""case when cut is null then paras
-                 |else filter(paras, (x, idx) ->
-                 |  not exists(cut, c -> c = idx + 1)) end""".stripMargin).as("kept"))
-        .select(col("doc_id"),
-          expr("cast(size(paras) as bigint)").as("n_before"),
-          expr("cast(size(kept) as bigint)").as("n_after"),
-          expr(h("concat_ws(concat(chr(10), chr(10)), kept)")).as("remediated_fp"))
+      cutFlagged(seg, "paras", crossDocUnits(pp).select(col("doc_id"), col("para_no")),
+        "para_no", "cut", width = 1, sep = "concat(chr(10), chr(10))")
     },
 
     // ---- embedding cosine near-dup (label + multi-probe LSH cells) ---------
@@ -2329,7 +2273,7 @@ object Dedup {
     // the result is deterministic regardless of execution order; the
     // oracle computes the same components with a recursive CTE.
     Q("q_dedup_clusters", clustersOracle) { (s, dir) =>
-      clustersFrame(s, dir)
+      clustersFrame(s, dir, rebuildMemo = true)
     },
 
     // ---- near-dup impact report (component size histogram) -----------------
@@ -2348,7 +2292,7 @@ object Dedup {
         |  (n_members - 1) * count(DISTINCT cluster_id) AS removable
         |FROM ($clustersOracle)
         |GROUP BY n_members""".stripMargin) { (s, dir) =>
-      clustersFrame(s, dir, reuse = true)
+      clustersFrame(s, dir, rebuildMemo = false)
         .groupBy(col("n_members").as("cluster_size"))
         .agg(countDistinct(col("cluster_id")).as("n_clusters"))
         .select(

@@ -65,6 +65,14 @@ object Multimodal {
       |  SELECT dhash, count(*) AS group_size, min(ikey) AS rep_key FROM hashed GROUP BY dhash
       |)""".stripMargin
 
+  /** The hamming-ball probe frame over a dHash group frame: each
+    * distinct hash with its `rep` emits 57 ball keys `bkey` (itself +
+    * 56 one-bit flips, [[Media.BALL_FLIP_SQL]]). */
+  private def ballProbes(rep: String)(
+      groups: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    groups.select(col("dhash"), col(rep), explode(expr("sequence(0, 56)")).as("b"))
+      .withColumn("bkey", expr(Media.BALL_FLIP_SQL))
+
   val queries: Seq[Q] = Seq(
 
     Q(
@@ -188,26 +196,13 @@ object Multimodal {
       val items = Media.dHashItems(Media.synthesize(s, dir))
         .withColumn("ikey", expr(Media.ikeySql))
         .persistScoped()
-      val groups = items.groupBy(col("dhash"))
-        .agg(count(lit(1)).as("group_size"), min(col("ikey")).as("rep_key"))
-      val probes = groups.select(col("dhash"), col("rep_key"),
-          explode(expr("sequence(0, 56)")).as("b"))
-        .withColumn("bkey", expr(Media.BALL_FLIP_SQL))
-      val cand = probes.as("a")
-        .join(probes.as("b"), expr("a.bkey = b.bkey and a.dhash != b.dhash"))
-        .select(col("a.dhash").as("dhash"), col("b.dhash").as("h_b"), col("b.rep_key").as("nrep"))
-        .distinct() // a hash pair shares exactly two ball keys — count once
-        // provably a no-op — MediaSpec's midpoint theorem ("ball-probe
-        // candidates ≡ brute-force hamming ≤ 2"): distinct hashes share
-        // a ball key ⟺ d ≤ 2, so the equi-join above already admits
-        // exactly the pairs this predicate states; kept as the contract
-        .filter(expr("bit_count(dhash ^ h_b) <= 2"))
-      val near = cand.groupBy(col("dhash"))
-        .agg(count(lit(1)).as("n_near_hashes"), min(col("nrep")).as("near_min"))
-      val reps = groups.join(near, Seq("dhash"), "left")
-        .select(col("dhash"), col("group_size"), col("rep_key"),
-          coalesce(col("n_near_hashes"), lit(0L)).as("n_near_hashes"),
-          least(col("rep_key"), coalesce(col("near_min"), col("rep_key"))).as("near_rep_key"))
+      // a hash pair shares exactly two ball keys — DISTINCT counts it
+      // once; the radius filter is provably a no-op (MediaSpec's
+      // midpoint theorem, "ball-probe candidates ≡ brute-force
+      // hamming ≤ 2": distinct hashes share a ball key ⟺ d ≤ 2) and
+      // stays as the contract
+      val reps = Dedup.nearHashGroups(items, "dhash", "ikey", "rep_key", "h_b",
+        ballProbes("rep_key"), keys = Seq("bkey"), radius = 2, canonicalB = None)
       items.join(reps, Seq("dhash"))
         .select(col("media_id"), col("frame_no"), col("kind"), col("dhash"),
           col("group_size"),
@@ -401,25 +396,11 @@ object Multimodal {
                  |else shiftleft(cast(1 as bigint), cast((g + 29) % 56 as int)) end"""
             .stripMargin).as("flip"))
         .select(col("doc_id"), expr("base ^ flip").as("dhash"))
-      val groups = hashed.groupBy(col("dhash"))
-        .agg(count(lit(1)).as("group_size"), min(col("doc_id")).as("rep_id"))
-      val probes = groups.select(col("dhash"), col("rep_id"),
-          explode(expr("sequence(0, 56)")).as("b"))
-        .withColumn("bkey", expr(Media.BALL_FLIP_SQL))
-      val cand = probes.as("a")
-        .join(probes.as("b"), expr("a.bkey = b.bkey and a.dhash != b.dhash"))
-        .select(col("a.dhash").as("dhash"), col("b.dhash").as("h_b"), col("b.rep_id").as("nrep"))
-        .distinct() // a near pair shares exactly two ball keys
-        // the ball join itself already excludes the planted distance-3
-        // pair (balls at d=3 are disjoint); the filter restates the
-        // radius contract, same as the oracle's WHERE
-        .filter(expr("bit_count(dhash ^ h_b) <= 2"))
-      val near = cand.groupBy(col("dhash"))
-        .agg(count(lit(1)).as("n_near_hashes"), min(col("nrep")).as("near_min"))
-      groups.join(near, Seq("dhash"), "left")
-        .select(col("dhash"), col("group_size"), col("rep_id"),
-          coalesce(col("n_near_hashes"), lit(0L)).as("n_near_hashes"),
-          least(col("rep_id"), coalesce(col("near_min"), col("rep_id"))).as("near_rep_id"))
+      // the ball join itself already excludes the planted distance-3
+      // pair (balls at d=3 are disjoint); the radius filter restates the
+      // contract, same as the oracle's WHERE
+      Dedup.nearHashGroups(hashed, "dhash", "doc_id", "rep_id", "h_b",
+        ballProbes("rep_id"), keys = Seq("bkey"), radius = 2, canonicalB = None)
     },
 
     // REAL frame sampling under the hash gate: 4 evenly-spaced frames

@@ -472,16 +472,18 @@ object Similarity {
         expr(qHash).as("qh"))
       .orderBy(col("qh"), col("query_id")).limit(nq(s, dir))
       .select(col("query_id"), col("q_emb"))
-    // per-query LUT: |Q| x M x K partial dots — tiny, broadcast
-    val lut = pqLut(q, cb)
+    // per-query LUT: |Q| x M x K partial dots — tiny, driver-localized
+    // so the broadcast below pins a bounded model frame
+    val lut = localizedModel(pqLut(q, cb))
     val adc = codes.join(broadcast(lut), Seq("m", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id").as("cand_id"))
       .agg(sum(col("ldot").cast("decimal(28,12)")).as("adc"))
-    val top = adc
+    // <= |Q|·3 survivors, driver-localized for the same reason
+    val top = localizedModel(adc
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("cand_id"))))
-      .filter(col("rn") <= 3)
+      .filter(col("rn") <= 3))
     // exact full dot for the <= |Q|*3 surviving pairs only
     e.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
       .join(broadcast(top), "cand_id")
@@ -560,10 +562,7 @@ object Similarity {
     // (train once, encode per build). The ENCODE memo still rebuilds
     // in the builder — that cost stays honest per run.
     val cbRows = pqModel(s, dir).cb
-    def build = pqEncode(e, cbRows)
-    val codes =
-      if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "pq_codes")(build)
-      else graft.io.KernelMemo.reuse(s, dir, "pq_codes")(build)
+    val codes = graft.io.KernelMemo(s, dir, "pq_codes", rebuildMemo)(pqEncode(e, cbRows))
     (cbRows.toDF("m", "k", "cb"), codes)
   }
 
@@ -1126,10 +1125,7 @@ object Similarity {
       rebuildMemo: Boolean): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import s.implicits._
     val cbRows = pqCbModelMap(s).getOrElseUpdate(dir + "#adc", trainPqCbOn(s, dir, res)).cb
-    def build = pqEncode(res, cbRows)
-    val codes =
-      if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "pq_adc_codes")(build)
-      else graft.io.KernelMemo.reuse(s, dir, "pq_adc_codes")(build)
+    val codes = graft.io.KernelMemo(s, dir, "pq_adc_codes", rebuildMemo)(pqEncode(res, cbRows))
     (cbRows.toDF("m", "k", "cb"), codes)
   }
 
@@ -1967,9 +1963,11 @@ object Similarity {
           expr(qHash).as("qh"))
         .orderBy(col("qh"), col("query_id")).limit(nq(s, dir))
         .select(col("query_id"), col("q_emb"), col("cell"))
-      val lut = pqLut(q, cb)
-      val qc = q.join(broadcast(cents), "cell")
-        .select(col("query_id"), expr(dot("q_emb", "c_emb")).cast("decimal(18,12)").as("qcd"))
+      // the |Q|-bounded frames below are driver-localized (the
+      // q_ann_ivfpq rule), so each broadcast pins a bounded model frame
+      val lut = localizedModel(pqLut(q, cb))
+      val qc = localizedModel(q.join(broadcast(cents), "cell")
+        .select(col("query_id"), expr(dot("q_emb", "c_emb")).cast("decimal(18,12)").as("qcd")))
       val p = assign
         .select(col("vec_id").as("cand_id"), col("cell").as("x_cell"))
         .join(q.select(col("query_id"), col("cell")),
@@ -1983,10 +1981,10 @@ object Similarity {
         .join(broadcast(qc), "query_id")
         .select(col("query_id"), col("cand_id"),
           (col("qcd") + col("radc").cast("decimal(18,12)")).cast("decimal(18,12)").as("adc"))
-      val top = adc
+      val top = localizedModel(adc
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("cand_id"))))
-        .filter(col("rn") <= 3)
+        .filter(col("rn") <= 3))
       e.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
         .join(broadcast(top), "cand_id")
         .join(broadcast(q.select(col("query_id"), col("q_emb"))), "query_id")
@@ -2057,16 +2055,18 @@ object Similarity {
           expr(qHash).as("qh"))
         .orderBy(col("qh"), col("query_id")).limit(nq(s, dir))
         .select(col("query_id"), col("q_emb"))
-      // |Q| × |C| exact-DECIMAL probe rank — both sides bounded models
-      val probes = q.crossJoin(broadcast(cents))
+      // |Q| × |C| exact-DECIMAL probe rank — both sides bounded models,
+      // and the |Q|-bounded frames are driver-localized (the q_ann_ivfpq
+      // rule), so each broadcast pins a bounded model frame
+      val probes = localizedModel(q.crossJoin(broadcast(cents))
         .select(col("query_id"), col("q_emb"), col("cell").as("pcell"),
           expr(dot("q_emb", "c_emb")).as("cd"))
         .withColumn("crn", row_number().over(
           Window.partitionBy(col("query_id")).orderBy(col("cd").desc, col("pcell"))))
         .filter(col("crn") <= 2)
         .select(col("query_id"), col("pcell"),
-          col("cd").cast("decimal(18,12)").as("qcd"))
-      val lut = pqLut(q, cb)
+          col("cd").cast("decimal(18,12)").as("qcd")))
+      val lut = localizedModel(pqLut(q, cb))
       val p = assign
         .select(col("vec_id").as("cand_id"), col("cell").as("x_cell"))
         .join(broadcast(probes),
@@ -2079,10 +2079,10 @@ object Similarity {
         .agg(sum(col("ldot").cast("decimal(28,12)")).as("radc"))
         .select(col("query_id"), col("cand_id"),
           (col("qcd") + col("radc").cast("decimal(18,12)")).cast("decimal(18,12)").as("adc"))
-      val top = adc
+      val top = localizedModel(adc
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("cand_id"))))
-        .filter(col("rn") <= 3)
+        .filter(col("rn") <= 3))
       e.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
         .join(broadcast(top), "cand_id")
         .join(broadcast(q), "query_id")
@@ -3196,11 +3196,8 @@ object Similarity {
     * fixpoint it exists to run, not a second pair generation. */
   private[graft] def semanticPairs(
       s: org.apache.spark.sql.SparkSession, dir: String,
-      rebuildMemo: Boolean): org.apache.spark.sql.DataFrame = {
-    def build = semanticCellsAndPairs(s, dir)._2
-    if (rebuildMemo) graft.io.KernelMemo.rebuild(s, dir, "sem_pairs")(build)
-    else graft.io.KernelMemo.reuse(s, dir, "sem_pairs")(build)
-  }
+      rebuildMemo: Boolean): org.apache.spark.sql.DataFrame =
+    graft.io.KernelMemo(s, dir, "sem_pairs", rebuildMemo)(semanticCellsAndPairs(s, dir)._2)
 
   private[graft] def semanticCellsAndPairs(
       s: org.apache.spark.sql.SparkSession,

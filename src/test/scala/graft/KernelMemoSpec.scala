@@ -50,6 +50,13 @@ class KernelMemoSpec extends SparkSpec {
     }
     assert(got eq v2)
     assert(got.count() == 4)
+    // the single dispatch: rebuild = true refreshes, rebuild = false reuses
+    val v3 = KernelMemo(spark, sf(), "spec_refresh", rebuild = true)(spark.range(5).toDF("id"))
+    val got3 = KernelMemo(spark, sf(), "spec_refresh", rebuild = false) {
+      fail("rebuild = false must hit the refreshed memo"): org.apache.spark.sql.DataFrame
+    }
+    assert(got3 eq v3)
+    assert(got3.count() == 5)
   }
 
   test("memo keys are scoped per data directory") {

@@ -330,7 +330,7 @@ class PlanShapeSpec extends SparkSpec {
     val gated = Seq("q_ann_topk", "q_ann_lsh", "q_ann_ivf", "q_ann_kmeans",
       "q_ann_ivf_multiprobe", "q_pipeline_filter", "q_dedup_ngram_capped",
       "q_heavy_hitters",
-      "q_ann_ivfpq",
+      "q_ann_ivfpq", "q_ann_pq", "q_ann_ivfadc", "q_ann_ivfadc_multiprobe",
       "q_tpch_q2", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q11",
       "q_tpch_q15", "q_tpch_q17", "q_tpch_q22")
     for (name <- gated) {
